@@ -261,31 +261,29 @@ object DedupQueries {
     * dedup_incremental "regression" was exactly the minhash frame
     * build landing on it).
     *
-    * The builds run on a small driver-side thread pool (guide §2.6 —
-    * overlap independent jobs): the frame DAG has four independent
+    * The builds run as concurrent [[graft.Chains]] to overlap
+    * independent jobs: the frame DAG has four independent
     * chains once the shingle frame exists (minhash→LSH bands,
     * candidates→pairs→components, simhash, spans), and each chain is
     * a sequence of small stages that leaves most of local[N] idle —
     * overlapping them backfills the idle cores without changing any
-    * frame's content (each chain touches distinct cache keys; inner
-    * dependencies read already-cached frames). Measured at sf0.1:
-    * warm_dedup_frames 13.3 → ~7 s.
+    * frame's content. Measured at sf0.1: warm_dedup_frames 13.3 → ~7 s.
     */
   private[graft] def warmShared(s: SparkSession, d: String): Unit = {
     shingleFrame(s, d) // the shared root: everything below reads it
-    // the per-doc set-size census builds BEFORE the fan-out, like the
-    // root: both verify chains consume it mid-flight, and
-    // buildConcurrently's contract requires the chains to touch
-    // DISTINCT cache keys (a TrieMap getOrElseUpdate race would run
-    // the build twice)
+    // the per-doc set-size census builds before the fan-out, like the
+    // root: both verify chains consume it mid-flight
     shingleCountsFrame(s, d)
-    SharedFrames.buildConcurrently(Seq(
-      () => { minhashFrame(s, d); lshCandidatesFrame(s, d);
-              lshVerifiedFrame(s, d); () },
-      () => { candidatesFrame(s, d); pairsFrame(s, d)
-              componentsFrame(s, d); () },
-      () => { simhashFrame(s, d); hammingPairsShared(s, d); () },
-      () => { spansFrame(s, d); () }))
+    graft.Chains.run(s, Seq(
+      Seq("minhash_sig" -> (() => minhashFrame(s, d)),
+          "lsh_candidates" -> (() => lshCandidatesFrame(s, d)),
+          "lsh_verified" -> (() => lshVerifiedFrame(s, d))),
+      Seq("posting_candidates" -> (() => candidatesFrame(s, d)),
+          "verified_pairs" -> (() => pairsFrame(s, d)),
+          "dedup_components" -> (() => componentsFrame(s, d))),
+      Seq("simhash_sig" -> (() => simhashFrame(s, d)),
+          "hamming_pairs" -> (() => hammingPairsShared(s, d))),
+      Seq("substring_spans" -> (() => spansFrame(s, d)))))
   }
 
   /** Tokenized documents for the repeated-substring family (spans +

@@ -16,7 +16,7 @@ import org.apache.spark.storage.StorageLevel
   */
 object SharedFrames {
   private val frameCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), DataFrame]
+    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), Slot]
 
   /** Unpersist and forget every frame cached under `s`'s context (any
     * sf dir). Bench/Verify call this between query families: a frame
@@ -29,79 +29,44 @@ object SharedFrames {
     * happens to run first.
     */
   def release(s: SparkSession): Unit =
-    frameCache.filterInPlace { case ((sess, _, _), df) =>
+    frameCache.filterInPlace { case ((sess, _, _), slot) =>
       val keep = sess.sparkContext != s.sparkContext
-      if (!keep && !sess.sparkContext.isStopped) df.unpersist(blocking = false)
+      if (!keep && !sess.sparkContext.isStopped) slot.unpersist()
       keep
     }
 
-  /** Run independent frame-build chains concurrently on a small
-    * driver-side pool (optimization guide §2.6 — overlap independent
-    * jobs): each chain is a sequence of small stages that leaves most
-    * of local[N] idle, and the FIFO scheduler backfills one chain's
-    * stage tails with the others' tasks. Callers must ensure the
-    * chains touch DISTINCT cache keys (shared roots built before the
-    * fan-out): `cachedFrame`'s TrieMap is thread-safe, but two threads
-    * racing the same key would each run the build job once.
+  /** One cache entry. The first `frame` call builds it; concurrent
+    * callers of the same key block on the lazy val instead of building
+    * a second copy whose persisted blocks would leak until `release`.
     */
-  def buildConcurrently(chains: Seq[() => Unit]): Unit = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(chains.size)
-    try {
-      implicit val ec: scala.concurrent.ExecutionContextExecutorService =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration._
-      val done = new java.util.concurrent.atomic.AtomicInteger
-      val t0 = System.nanoTime()
-      val sc = org.apache.spark.sql.SparkSession.getActiveSession
-        .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-        .map(_.sparkContext)
-      val group = s"graft-warm-${java.util.UUID.randomUUID()}"
-      // a BOUNDED await with per-chain completion logs (r17 verdict nit
-      // #4): a wedged chain previously hung the whole census silently
-      // under Duration.Inf. 30 min is ~100x any measured warm build
-      // (the largest, the dedup LSH chain, is seconds at sf1) — hitting
-      // it means something is genuinely stuck, and the timeout names
-      // the chains that never finished instead of hanging forever.
-      try Await.result(Future.sequence(chains.zipWithIndex.map {
-        case (c, i) => Future {
-          // job groups are thread-local: tag each pool thread so a
-          // failure can cancel every sibling's in-flight Spark jobs
-          sc.foreach(_.setJobGroup(group, s"warm chain $i",
-            interruptOnCancel = true))
-          c()
-          System.err.println(f"[warm] chain $i done " +
-            f"(${done.incrementAndGet()}/${chains.size}, " +
-            f"${(System.nanoTime() - t0) / 1e9}%.2f s in)")
-        }
-      }), 30.minutes)
-      catch { case e: Throwable =>
-        // fail fast AND stop the siblings (advice r17): cancel the job
-        // group and interrupt queued/running chains so their stray
-        // Spark jobs don't overlap the next bench row's timing window
-        sc.foreach(_.cancelJobGroup(group))
-        pool.shutdownNow()
-        throw e
-      }
-      ()
-    } finally pool.shutdown()
+  private final class Slot(build: () => DataFrame) {
+    @volatile private var built = false
+    // materialize EAGERLY and fully: several builders (lineage
+    // closure, connected components) are backed by localCheckpointed
+    // loop RDDs that Bench sweeps between queries — a lazily-persisted
+    // frame whose first consumer fails mid-materialization, or whose
+    // partitions later need recompute, would chase destroyed
+    // checkpoint blocks. After count() every partition is
+    // memory/disk-backed and the truncated lineage is never re-walked.
+    lazy val frame: DataFrame = {
+      val df = build().persist(StorageLevel.MEMORY_AND_DISK)
+      df.count()
+      built = true
+      df
+    }
+    def unpersist(): Unit = if (built) frame.unpersist(blocking = false)
   }
 
+  /** The frame cached under (s, d, key), built by `build` on first use.
+    * Safe to call from concurrent threads with the same key: the build
+    * runs once, in the thread that got there first.
+    */
   def cachedFrame(s: SparkSession, d: String, key: String)
                  (build: => DataFrame): DataFrame = {
     frameCache.filterInPlace { case ((sess, _, _), _) => !sess.sparkContext.isStopped }
-    frameCache.getOrElseUpdate((s, d, key), {
-      // materialize EAGERLY and fully: several builders (lineage
-      // closure, connected components) are backed by localCheckpointed
-      // loop RDDs that Bench sweeps between queries — a lazily-persisted
-      // frame whose first consumer fails mid-materialization, or whose
-      // partitions later need recompute, would chase destroyed
-      // checkpoint blocks. After count() every partition is
-      // memory/disk-backed and the truncated lineage is never re-walked.
-      val df = build.persist(StorageLevel.MEMORY_AND_DISK)
-      df.count()
-      df
-    })
+    // TrieMap.getOrElseUpdate may construct a losing Slot, but only
+    // the Slot it returns is ever asked for its frame
+    frameCache.getOrElseUpdate((s, d, key), new Slot(() => build)).frame
   }
 
   /** The synthetic taxonomy dimension every lineage/tree query walks:

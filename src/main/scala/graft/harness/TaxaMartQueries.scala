@@ -125,12 +125,13 @@ object TaxaMartQueries {
 
   private[graft] def warmShared(s: SparkSession, d: String): Unit = {
     // the proteins frame is the shared root of BOTH chains — built
-    // before the fan-out (buildConcurrently's distinct-cache-key
-    // contract), then the two explode+persist chains overlap (§2.6)
+    // before the fan-out, then the two explode+persist chains overlap
     proteins(s, d)
-    SharedFrames.buildConcurrently(Seq(
-      () => { matchNodes(s, d); nodeStructures(s, d); () },
-      () => { proteinNodes(s, d); nodeProteinStats(s, d); () }))
+    graft.Chains.run(s, Seq(
+      Seq("mart_match_nodes" -> (() => matchNodes(s, d)),
+          "mart_node_structures" -> (() => nodeStructures(s, d))),
+      Seq("mart_protein_nodes" -> (() => proteinNodes(s, d)),
+          "mart_node_protein_stats" -> (() => nodeProteinStats(s, d)))))
   }
 
   val queries: Map[String, Q] = Map(

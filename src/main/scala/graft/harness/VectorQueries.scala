@@ -297,13 +297,14 @@ object VectorQueries {
     }
 
   private[graft] def warmShared(s: SparkSession, d: String): Unit =
-    // independent chains (distinct cache keys; embFrame/subFrame
-    // roots are plain expressions, not cached) — overlap them, §2.6
-    SharedFrames.buildConcurrently(Seq(
-      () => { ivfCentroids(s, d); () },
-      () => { pqCodebook(s, d); pqEncoded(s, d); () },
-      () => { gramFrame(s, d); () },
-      () => { bfCos5Frame(s, d); () }))
+    // independent chains (embFrame/subFrame roots are plain
+    // expressions, not cached) — overlap them
+    graft.Chains.run(s, Seq(
+      Seq("ivf_kmeans_centroids" -> (() => ivfCentroids(s, d))),
+      Seq("pq_codebook" -> (() => pqCodebook(s, d)),
+          "pq_codes" -> (() => pqEncoded(s, d))),
+      Seq("pca_gram" -> (() => gramFrame(s, d))),
+      Seq("bf_cos_top5" -> (() => bfCos5Frame(s, d)))))
 
   val queries: Map[String, Q] = Map(
     // Raw second-moment (gram) matrix of the embedding corpus — the

@@ -1,0 +1,71 @@
+package graft
+
+import graft.harness.SharedFrames
+
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.CollectionConverters._
+
+/** Concurrent chains (the release build, the shared-frame warm-ups)
+  * and the single-flight frame cache they rely on.
+  */
+class ChainsSpec extends SparkSpec {
+
+  test("chains run concurrently, each one's steps in order") {
+    // each chain waits for the other: run one after another, both would
+    // time out
+    val both = new CountDownLatch(2)
+    val met = new ConcurrentLinkedQueue[Boolean]
+    val log = new ConcurrentLinkedQueue[String]
+    def meet(): Unit = { both.countDown(); met.add(both.await(30, TimeUnit.SECONDS)) }
+    Chains.run(spark, Seq(
+      Seq("a1" -> (() => log.add("a1")), "a2" -> (() => meet()), "a3" -> (() => log.add("a3"))),
+      Seq("b1" -> (() => meet()))))
+    assert(met.asScala.toSeq === Seq(true, true))
+    assert(log.asScala.toSeq === Seq("a1", "a3"))
+  }
+
+  test("a failing step is named and cancels its siblings' Spark jobs") {
+    val t0 = System.nanoTime()
+    val e = intercept[RuntimeException] {
+      Chains.run(spark, Seq(
+        Seq("fine_step" -> (() => ()),
+            "failing_step" -> (() => {
+              Thread.sleep(1000) // the sibling's job is running by now
+              throw new IllegalStateException("boom")
+            })),
+        Seq("slow_sibling" -> (() =>
+          spark.sparkContext.parallelize(1 to 4, 4)
+            .map { i => Thread.sleep(120000); i }.count()))))
+    }
+    val secs = (System.nanoTime() - t0) / 1e9
+    assert(e.getMessage.contains("failing_step"))
+    assert(e.getMessage.contains("boom"))
+    assert(secs < 60, s"took $secs s: the call waited for the slow sibling")
+    val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(30)
+    while (spark.sparkContext.statusTracker.getActiveJobIds.nonEmpty &&
+           System.nanoTime() < deadline) Thread.sleep(100)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty,
+      "the sibling's Spark job was not cancelled")
+  }
+
+  test("concurrent requests for one frame key build it once") {
+    val builds = new AtomicInteger
+    val start = new CountDownLatch(1)
+    val rows = new ConcurrentLinkedQueue[Long]
+    val key = s"single_flight_${java.util.UUID.randomUUID()}"
+    val threads = Seq.fill(2)(new Thread(() => {
+      start.await()
+      rows.add(SharedFrames.cachedFrame(spark, sf, key) {
+        builds.incrementAndGet()
+        Thread.sleep(500) // hold the build open while the other thread asks
+        spark.range(10).toDF()
+      }.count())
+    }))
+    threads.foreach(_.start())
+    start.countDown()
+    threads.foreach(_.join(60000))
+    assert(rows.asScala.toSeq === Seq(10L, 10L))
+    assert(builds.get === 1)
+  }
+}

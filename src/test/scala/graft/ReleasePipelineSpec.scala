@@ -8,8 +8,17 @@ import java.nio.file.Files
 class ReleasePipelineSpec extends SparkSpec {
 
   test("release pipeline builds all stages") {
-    val out = Files.createTempDirectory("graft-release").toString
-    val stages = ReleasePipeline.build(spark, sf, out).toMap
+    // a directory that does not exist yet: the stages run concurrently,
+    // so the XML stage may stage its DTD before any Spark write has
+    // created the output directory
+    val out = Files.createTempDirectory("graft-release").resolve("out").toString
+    val built = ReleasePipeline.build(spark, sf, out)
+    // declared order, whatever order the concurrent stages finished in
+    assert(built.map(_._1) === Seq("protein2matches", "protein2matches_kv",
+      "entry2xrefs", "domain_orgs", "taxa_rollup", "webfront_entry",
+      "release_stats", "release_notes_diff", "entry_taxa_trees", "clan_graphs",
+      "signature_hierarchy", "protein2ipr", "match_complete.xml", "es_docs"))
+    val stages = built.toMap
     assert(stages("protein2matches") > 0)
     assert(stages("protein2matches_kv") === stages("protein2matches"))
     assert(stages("entry2xrefs") === 7)  // IPR0..IPR6
