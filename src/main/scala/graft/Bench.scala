@@ -1,19 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        SparkLocal.initialShufflePartitions(sfDir, cpus.toInt))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkLocal.session(sfDir)
     // hypervisor-steal gauge: on a shared host the guest's wall times
     // inflate with cycles the hypervisor gives to OTHER guests, which
     // /proc/stat's steal column counts. Recording steal over the run
@@ -137,9 +126,15 @@ object Bench {
     val full = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failedJson,"spill_mb":$totalSpillMb,"heap_mb":${Runtime.getRuntime.maxMemory() >> 20}$stealJson,"sf":"$sfDir"}"""
     // the driver stores only the last ~2000 log chars, which the full
     // per-query map exceeds — persist it to a repo file and keep the
-    // FINAL stdout line compact enough to always fit the tail capture
-    val detailPath = java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL", "BENCH_LOCAL.json"))
+    // FINAL stdout line compact enough to always fit the tail capture.
+    // Only a full census writes the BENCH_LOCAL.json record: a filtered
+    // run with no named detail path writes a temp file, so it cannot
+    // overwrite the record
+    val detailPath = sys.env.get("SPARK_GRAFT_BENCH_DETAIL")
+      .map(java.nio.file.Paths.get(_))
+      .getOrElse(
+        if (only.isEmpty) java.nio.file.Paths.get("BENCH_LOCAL.json")
+        else java.nio.file.Files.createTempFile("graft-bench-", ".json"))
       .toAbsolutePath
     try java.nio.file.Files.writeString(detailPath, full + "\n")
     catch { case e: Throwable =>

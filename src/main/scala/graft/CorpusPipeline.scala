@@ -173,26 +173,6 @@ object CorpusPipeline {
     stages.result()
   }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val outDir = if (args.length > 1) args(1) else "/tmp/graft-corpus"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        SparkLocal.initialShufflePartitions(sfDir,
-          sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val t0 = System.nanoTime()
-    val stages = build(spark, sfDir, outDir)
-    val secs = (System.nanoTime() - t0) / 1e9
-    val stageJson = stages.map { case (n, c) => s""""$n":$c""" }.mkString("{", ",", "}")
-    println(s"""{"pipeline":"corpus","sf":"$sfDir","sec":$secs,"stages":$stageJson}""")
-    spark.stop()
-  }
+  def main(args: Array[String]): Unit =
+    SparkLocal.pipelineMain("corpus", args, build)
 }

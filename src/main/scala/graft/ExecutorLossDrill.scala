@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.TaskContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerExecutorRemoved}
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 
 /** Executor-loss drill on a REAL multi-process mini-cluster —
@@ -69,36 +69,13 @@ object ExecutorLossDrill {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val addOpens = Seq(
-      "java.lang", "java.lang.invoke", "java.lang.reflect", "java.io",
-      "java.net", "java.nio", "java.util", "java.util.concurrent",
-      "java.util.concurrent.atomic", "sun.nio.ch", "sun.nio.cs",
-      "sun.security.action", "sun.util.calendar")
-      .map(p => s"--add-opens java.base/$p=ALL-UNNAMED").mkString(" ")
-    val spark = SparkSession.builder()
-      .master("local-cluster[3,4,2048]")
-      .config("spark.executor.extraClassPath",
-        "/root/repo/target/scala-2.13/classes")
-      .config("spark.executor.extraJavaOptions", addOpens)
-      .config("spark.sql.shuffle.partitions", "16")
+    val spark = SparkLocal.session(sfDir, Some("local-cluster[3,4,2048]"),
       // AQE off: at drill scale its partition coalescing collapses the
       // loop frames to ONE block on ONE executor, making the
       // default-mode block-loss outcome a 1-in-3 coin flip instead of
       // deterministic (every executor must hold blocks so the first
       // kill always hits a holder)
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // static cleaner flag: reliable-mode rounds delete their
-      // checkpoint dirs once dereferenced instead of accumulating
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // all three executor JVMs share this machine's filesystem, so a
-    // shared tmp checkpoint dir is correct HERE and declared up front
-    // (Loops fails fast rather than inventing one on non-local masters)
-    SparkLocal.singleMachineCheckpointDir(spark)
+      Seq("spark.sql.adaptive.enabled" -> "false"))
     val removed = new java.util.concurrent.atomic.AtomicLong
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onExecutorRemoved(e: SparkListenerExecutorRemoved): Unit =

@@ -1,24 +1,16 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Physical-plan audit: print `explain(formatted)` for the named
   * queries (all when no names given) so scan pruning / pushdown /
-  * join strategy / codegen spans can be reviewed per operator.
+  * join strategy / codegen spans can be reviewed per operator. Plans
+  * under the same session confs Bench times.
   * Usage: PlanAudit <sfDir> [query ...]
   */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val only = args.drop(1).toSet
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SparkLocal.session(sfDir)
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.isEmpty || only(n) }
       .foreach { case (name, fn) =>

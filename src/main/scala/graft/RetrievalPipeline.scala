@@ -139,36 +139,12 @@ object RetrievalPipeline {
     stages.result()
   }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val outDir = if (args.length > 1) args(1) else "/tmp/graft-retrieval"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        SparkLocal.initialShufflePartitions(sfDir,
-          sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val t0 = System.nanoTime()
-    val stages = build(spark, sfDir, outDir)
-    val secs = (System.nanoTime() - t0) / 1e9
-    val m = stages.toMap
-    val recall =
-      if (m("recall_expected") == 0) 0.0
-      else m("recall_hits").toDouble / m("recall_expected")
-    val rerankRecall =
-      if (m("rerank_recall_expected") == 0) 0.0
-      else m("rerank_recall_hits").toDouble / m("rerank_recall_expected")
-    val stageJson = stages.map { case (k, c) => s""""$k":$c""" }
-      .mkString("{", ",", "}")
-    println(s"""{"pipeline":"retrieval","sf":"$sfDir","sec":$secs,""" +
-      s""""recall_at_$TopK":$recall,""" +
-      s""""rerank_recall_at_$TopK":$rerankRecall,"stages":$stageJson}""")
-    spark.stop()
-  }
+  def main(args: Array[String]): Unit =
+    SparkLocal.pipelineMain("retrieval", args, build, m => {
+      def ratio(hits: String, expected: String): Double =
+        if (m(expected) == 0) 0.0 else m(hits).toDouble / m(expected)
+      Seq(s"recall_at_$TopK" -> ratio("recall_hits", "recall_expected"),
+        s"rerank_recall_at_$TopK" ->
+          ratio("rerank_recall_hits", "rerank_recall_expected"))
+    })
 }

@@ -2,7 +2,7 @@ package graft
 
 import graft.ops.RelOps
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 
 /** Task-retry determinism drill — the cluster failure mode the shared
@@ -81,14 +81,8 @@ object RetryDrill {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")},3]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // local[N,3]: up to 3 attempts per task, so injected failures retry
+    val spark = SparkLocal.session(sfDir, Some(s"local[${SparkLocal.defaultCpus},3]"))
 
     val lineitem = Tables.lineitem(spark, sfDir)
     val orders = Tables.orders(spark, sfDir)

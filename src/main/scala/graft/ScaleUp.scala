@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Derive a larger scale-factor dataset from an existing one by
@@ -87,14 +87,10 @@ object ScaleUp {
     val vocabMode = mode == "vocab"
     val zipfMode = mode == "zipf"
     val zipfDocMode = mode == "zipfdoc"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // nanosAsLong: copy a TIMESTAMP(NANOS) events column through as the
+    // raw long it is stored as, so the replicas keep the source encoding
+    val spark = SparkLocal.session(src,
+      extra = Seq("spark.sql.legacy.parquet.nanosAsLong" -> "true"))
 
     def stride(df: DataFrame, key: String): Long =
       df.agg(max(col(key))).head.getLong(0) + 1

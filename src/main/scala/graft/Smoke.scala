@@ -1,20 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Local smoke for the driver's t1 check: run the flagship entry query
   * and print its row count (driver requires rows > 0 at sf0.001).
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the scale the entry query reads
+    val spark = SparkLocal.session("/root/testdata/sf0.001")
     val df = SparkEntry.entry(spark)
     println(s"entry rows=${df.count()}")
     df.show(5, truncate = false)

@@ -1,6 +1,9 @@
 package graft
 
-/** Shared sizing for the local harness sessions.
+import org.apache.spark.sql.SparkSession
+
+/** The one session factory every harness main builds through, plus the
+  * shared sizing it applies.
   *
   * `spark.sql.shuffle.partitions` is fixed at the core count (the
   * harness contract), which is right until a rehearsal SF pushes tens
@@ -18,28 +21,112 @@ package graft
   */
 object SparkLocal {
 
-  /** Input-proportional initial shuffle width: one initial partition
-    * per ~2 MB of on-disk input (intermediate frames in this workload
-    * run 10-50x the input: trigram/shingle explodes, pair expansions),
-    * floored at the core count and capped at 1024.
+  /** SPARK_GRAFT_CPUS, else the host's core count. */
+  def defaultCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  private val LocalN = """local\[(\d+)(?:,\d+)?\]""".r
+  private val LocalCluster = """local-cluster\[(\d+),(\d+),\d+\]""".r
+
+  /** Task slots the master offers: N for `local[N]` and `local[N,F]`,
+    * executors × cores for `local-cluster[E,C,M]`.
     */
+  private def cpusOf(master: String): Int = master.replace(" ", "") match {
+    case LocalN(n) => n.toInt
+    case LocalCluster(e, c) => e.toInt * c.toInt
+    case _ => defaultCpus
+  }
+
+  /** The directory or jar the running graft classes were loaded from —
+    * what executor processes of a non-local master must load too. */
+  def codeLocation: String = java.nio.file.Paths.get(
+    getClass.getProtectionDomain.getCodeSource.getLocation.toURI).toString
+
+  /** JDK packages Spark reflects into; executor JVMs need them opened
+    * explicitly, as `tools/run.sh` opens them for the launching JVM. */
+  private val AddOpens: Seq[String] = Seq(
+    "java.lang", "java.lang.invoke", "java.lang.reflect", "java.io",
+    "java.net", "java.nio", "java.util", "java.util.concurrent",
+    "java.util.concurrent.atomic", "sun.nio.ch", "sun.nio.cs",
+    "sun.security.action", "sun.util.calendar")
+
+  /** The harness session's confs for `sfDir` on `master`
+    * (`local[defaultCpus]` when none is given). */
+  def conf(sfDir: String, master: Option[String] = None): Seq[(String, String)] = {
+    val m = master.getOrElse(s"local[$defaultCpus]")
+    val cpus = cpusOf(m)
+    Seq(
+      "spark.master" -> m,
+      "spark.sql.shuffle.partitions" -> cpus.toString,
+      "spark.sql.adaptive.coalescePartitions.initialPartitionNum" ->
+        initialShufflePartitions(sfDir, cpus).toString,
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.ui.enabled" -> "false",
+      "spark.sql.extensions" -> "graft.plans.GraftExtensions") ++
+    (if (m == "local" || m.startsWith("local[")) Nil else Seq(
+      "spark.executor.extraClassPath" -> codeLocation,
+      "spark.executor.extraJavaOptions" ->
+        AddOpens.map(p => s"--add-opens java.base/$p=ALL-UNNAMED").mkString(" "),
+      // reliable loops (the default on a non-local master) write one
+      // checkpoint dir per round; without the cleaner flag — STATIC,
+      // so it must be set at context build — dereferenced rounds
+      // accumulate on disk for the whole session
+      "spark.cleaner.referenceTracking.cleanCheckpoints" -> "true"))
+  }
+
+  /** The harness session: `conf(sfDir, master)` plus the caller's
+    * `extra` confs, WARN logging, and on a non-local master the
+    * single-machine checkpoint dir. */
+  def session(sfDir: String, master: Option[String] = None,
+              extra: Seq[(String, String)] = Nil): SparkSession = {
+    val spark = (conf(sfDir, master) ++ extra)
+      .foldLeft(SparkSession.builder()) { case (b, (k, v)) => b.config(k, v) }
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    singleMachineCheckpointDir(spark)
+    spark
+  }
+
+  /** The pipelines' shared main: `<sfDir> [outDir]`, times `build` and
+    * prints one JSON line with the stage counts; `fields` adds
+    * pipeline-specific figures computed from those counts. */
+  def pipelineMain(pipeline: String, args: Array[String],
+                   build: (SparkSession, String, String) => Seq[(String, Long)],
+                   fields: Map[String, Long] => Seq[(String, Double)] = _ => Nil): Unit = {
+    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
+    val outDir = args.lift(1).getOrElse(s"/tmp/graft-$pipeline")
+    val spark = session(sfDir)
+    val t0 = System.nanoTime()
+    val stages = build(spark, sfDir, outDir)
+    val secs = (System.nanoTime() - t0) / 1e9
+    val extra = fields(stages.toMap).map { case (k, v) => s""""$k":$v,""" }.mkString
+    val stageJson = stages.map { case (n, c) => s""""$n":$c""" }.mkString("{", ",", "}")
+    println(s"""{"pipeline":"$pipeline","sf":"$sfDir","sec":$secs,$extra"stages":$stageJson}""")
+    spark.stop()
+  }
+
   /** Harness-main topology statement: the only non-local masters the
     * harness ever runs are single-machine `local-cluster[...]`
     * topologies (ExecutorLossDrill, the SPARK_GRAFT_MASTER verify
     * gate), where every executor process shares one filesystem — so a
     * shared temp checkpoint dir for reliable loops is CORRECT here,
-    * and the mains declare it explicitly. The library itself never
-    * assumes this: `Loops.materialize` fails fast on a non-local
+    * and the session factory declares it explicitly. The library itself
+    * never assumes this: `Loops.materialize` fails fast on a non-local
     * master with no checkpoint dir, because on a real multi-host
     * cluster a driver-created /tmp path would scatter checkpoint
     * blocks across node-local disks (the r16 judge's finding #1).
     */
-  def singleMachineCheckpointDir(spark: org.apache.spark.sql.SparkSession): Unit =
+  private def singleMachineCheckpointDir(spark: SparkSession): Unit =
     if (!spark.sparkContext.isLocal &&
         spark.sparkContext.getCheckpointDir.isEmpty)
       spark.sparkContext.setCheckpointDir(java.nio.file.Files
         .createTempDirectory("graft-harness-ckpt").toString)
 
+  /** Input-proportional initial shuffle width: one initial partition
+    * per ~2 MB of on-disk input (intermediate frames in this workload
+    * run 10-50x the input: trigram/shingle explodes, pair expansions),
+    * floored at the core count and capped at 1024.
+    */
   def initialShufflePartitions(sfDir: String, cpus: Int): Int =
     // SPARK_GRAFT_WIDTH: rehearsal override. The input-proportional
     // width is exactly what keeps per-task working sets flat as data

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
@@ -40,18 +40,10 @@ object StateSoak {
     val batches = args.headOption.map(_.toInt).getOrElse(200)
     val only = args.drop(1).toSet
     val root = java.nio.file.Files.createTempDirectory("graft-soak-")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+    val spark = SparkLocal.session(root.toString, extra = Seq(
       // retain every micro-batch's progress: the soak reads the state
       // metrics from recentProgress after the drain
-      .config("spark.sql.streaming.numRecentProgressUpdates", batches * 2)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+      "spark.sql.streaming.numRecentProgressUpdates" -> (batches * 2).toString))
 
     val baseUs = 1700000000L * 1000000L // fixed epoch base, whole seconds
 

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,42 +6,11 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, rest @ _*) = args
     val only = rest.toSet // optional query-name filter for local iteration
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // SPARK_GRAFT_MASTER=local-cluster[3,4,2048] runs the whole gate on
     // a real multi-process mini-cluster (the ExecutorLossDrill posture):
     // every query then proves itself over genuine cross-process shuffle
-    // fetches and executor-side classloading, not one shared JVM. The
-    // app classes and JDK17 module opens must ship to the executor
-    // processes explicitly; both knobs are no-ops for local[N].
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val execOpens = Seq(
-      "java.lang", "java.lang.invoke", "java.lang.reflect", "java.io",
-      "java.net", "java.nio", "java.util", "java.util.concurrent",
-      "java.util.concurrent.atomic", "sun.nio.ch", "sun.nio.cs",
-      "sun.security.action", "sun.util.calendar")
-      .map(p => s"--add-opens java.base/$p=ALL-UNNAMED").mkString(" ")
-    val spark = SparkSession.builder()
-      .master(master)
-      .config("spark.executor.extraClassPath",
-        "/root/repo/target/scala-2.13/classes")
-      .config("spark.executor.extraJavaOptions", execOpens)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        SparkLocal.initialShufflePartitions(sfDir, cpus.toInt))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // reliable loops (default on the non-local gate master) write
-      // one checkpoint dir per round; without the cleaner flag —
-      // STATIC, so it must be set at context build — dereferenced
-      // rounds accumulate on disk for the whole 240-query session
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // the local-cluster gate runs reliable loops; its executors share
-    // this machine's filesystem, so a shared tmp checkpoint dir is the
-    // explicit, correct topology statement (Loops itself fails fast)
-    SparkLocal.singleMachineCheckpointDir(spark)
+    // fetches and executor-side classloading, not one shared JVM
+    val spark = SparkLocal.session(sfDir, sys.env.get("SPARK_GRAFT_MASTER"))
     new java.io.File(outDir).mkdirs()
     // family-by-family with shared-frame release between families —
     // same discipline as Bench (see SharedFrames.release)

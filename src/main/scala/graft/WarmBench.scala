@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Steady-state micro-benchmark: runs each named query N times in one
   * session and prints every run. The first run absorbs codegen/JIT and
@@ -9,36 +8,22 @@ import org.apache.spark.sql.SparkSession
   * that this tool separates from real plan cost.
   *
   * Usage: tools/run.sh graft.WarmBench <sfDir> <query> [query ...]
-  *        (SPARK_GRAFT_RUNS to change the per-query run count;
-  *        SPARK_GRAFT_CONF="k=v;k=v" sets extra session confs, e.g.
-  *        spark.graft.treeEntries for the group-bound scaling drill)
+  *        (SPARK_GRAFT_RUNS to change the per-query run count). Extra
+  *        session confs ride in as `spark.*` JVM system properties,
+  *        which Spark copies into the session conf, e.g. the
+  *        group-bound scaling drill:
+  *        JAVA_TOOL_OPTIONS=-Dspark.graft.treeEntries=4096 \
+  *          SPARK_GRAFT_DRILL=1 tools/run.sh graft.WarmBench <sfDir> agg_tree_ranks
   */
 object WarmBench {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val extraConf = sys.env.get("SPARK_GRAFT_CONF").toSeq
-      .flatMap(_.split(';')).map(_.trim).filter(_.contains("="))
-      .map { kv => val Array(k, v) = kv.split("=", 2); (k, v) }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // match Bench/Verify's input-sized shuffle width: without it the
-      // perf A/B tool measures a different shuffle configuration than
-      // the bench it is meant to explain at rehearsal SFs
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        SparkLocal.initialShufflePartitions(sfDir, cpus.toInt))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    extraConf.foreach { case (k, v) => spark.conf.set(k, v) }
+    val spark = SparkLocal.session(sfDir)
     for (q <- args.drop(1); i <- 1 to runs) {
       val t0 = System.nanoTime()
-      SparkEntry.queries(q)(spark, sfDir).count()
-      println(f"$q run$i ${(System.nanoTime() - t0) / 1e9}%.2f s")
+      val rows = SparkEntry.queries(q)(spark, sfDir).count()
+      println(f"$q run$i ${(System.nanoTime() - t0) / 1e9}%.2f s rows=$rows")
       // same ephemeral-block sweep as Bench: without it each run's
       // localCheckpoint blocks linger until a GC lets the context
       // cleaner fire, and block-manager pressure turns repeat runs

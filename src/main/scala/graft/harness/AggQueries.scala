@@ -148,8 +148,9 @@ object AggQueries {
       // the named cause of the flat 8→32-core row in SCALE.md. At
       // production entry counts (InterPro ships ~40k entries) the
       // stage parallelizes with the data — the knob lets the scaling
-      // drill MEASURE that instead of arguing it (WarmBench with
-      // --conf spark.graft.treeEntries=4096). The DuckDB oracle pins
+      // drill MEASURE that instead of arguing it (JAVA_TOOL_OPTIONS=
+      // -Dspark.graft.treeEntries=4096 SPARK_GRAFT_DRILL=1 tools/run.sh
+      // graft.WarmBench <sfDir> agg_tree_ranks). The DuckDB oracle pins
       // the default; the drill compares wall-clock, not rows. The knob
       // is honored ONLY under the explicit drill switch
       // (SPARK_GRAFT_DRILL=1): a declared query must compute exactly
