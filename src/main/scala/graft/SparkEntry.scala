@@ -68,16 +68,18 @@ object SparkEntry {
     * alphabetically-first consumer (per-query numbers then measure
     * the query, not cache luck). Correctness paths (Verify) don't
     * need them — the frames build lazily on first use either way.
+    * A frame preamble runs one step per declared frame, all at once;
+    * the single-flight cache orders them (see SharedFrames.preamble).
     */
   val preambles: Map[String, (SparkSession, String) => Unit] = Map(
-    "agg" -> ((s, d) => { harness.SharedFrames.taxaLineage(s, d); () }),
-    "kernel" -> ((s, d) => { harness.SharedFrames.taxaLineage(s, d); () }),
-    "dedup" -> ((s, d) => harness.DedupQueries.warmShared(s, d)),
-    "text" -> ((s, d) => harness.TextQueries.warmShared(s, d)),
-    "vector" -> ((s, d) => harness.VectorQueries.warmShared(s, d)),
-    "stream" -> ((s, d) => { harness.StreamQueries.annIndexDir(s, d); () }),
-    "taxamart" -> ((s, d) => harness.TaxaMartQueries.warmShared(s, d)),
-    "graph" -> ((s, d) => harness.GraphQueries.warmShared(s, d)))
+    "agg" -> SharedFrames.preamble(Seq(SharedFrames.taxaLineage)),
+    "kernel" -> SharedFrames.preamble(Seq(SharedFrames.taxaLineage)),
+    "dedup" -> SharedFrames.preamble(DedupQueries.sharedFrames),
+    "text" -> SharedFrames.preamble(TextQueries.sharedFrames),
+    "vector" -> SharedFrames.preamble(VectorQueries.sharedFrames),
+    "stream" -> ((s, d) => { StreamQueries.annIndexDir(s, d); () }),
+    "taxamart" -> SharedFrames.preamble(TaxaMartQueries.sharedFrames),
+    "graph" -> SharedFrames.preamble(GraphQueries.sharedFrames))
 
   /** One entry per implemented operator from SURVEY.md §2 plus the
     * LLM-pipeline north-star ops (dedup / similarity / text / media). */

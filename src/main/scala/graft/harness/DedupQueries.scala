@@ -76,16 +76,6 @@ object DedupQueries {
                                //   ~730k keys -> ~7% fp, sf1 ~0.4%)
   private val BloomK = 3       // probes per shingle id
 
-  /** Cross-query frames via [[SharedFrames]]: the shingle frame feeds
-    * three separate harness queries (jaccard, minhash-LSH, components)
-    * and is consumed up to 4x inside one query (signature agg, per-doc
-    * counts, both verification join sides); the minhash signature
-    * frame feeds both sides of the band self-join.
-    */
-  private def cachedFrame(s: SparkSession, d: String, key: String)
-                         (build: => DataFrame): DataFrame =
-    SharedFrames.cachedFrame(s, d, key)(build)
-
   /** Distinct (doc_id, shingle-id) pairs for docs with >= N tokens.
     * Shingles are HASHED to 52-bit ints at the source (Broder's
     * original minhash operates on hashed shingles): the distinct
@@ -95,17 +85,16 @@ object DedupQueries {
     * Both engines derive the id from the same md5 prefix, so hash
     * collisions (~n²/2^52 — negligible) are shared deterministically.
     */
-  private def shingleFrame(s: SparkSession, d: String): DataFrame =
-    cachedFrame(s, d, "shingles") {
-      // tokens materialize as a column BEFORE the shingle lambda
-      // (inlining the split into the transform() re-evaluates it per
-      // shingle position — O(tokens^2) per doc, profiled 3x slower);
-      // the op itself lives in CorpusOps.shingleFrame
-      graft.ops.CorpusOps.shingleFrame(
-        Tables.widened(Tables.documents(s, d))
-          .select(col("doc_id"), TextOps.tokens(col("text")).as("toks")),
-        "doc_id", "toks", N)
-    }
+  private val shingleFrame = SharedFrames.Frame("shingles") { (s, d) =>
+    // tokens materialize as a column BEFORE the shingle lambda
+    // (inlining the split into the transform() re-evaluates it per
+    // shingle position — O(tokens^2) per doc, profiled 3x slower);
+    // the op itself lives in CorpusOps.shingleFrame
+    graft.ops.CorpusOps.shingleFrame(
+      Tables.widened(Tables.documents(s, d))
+        .select(col("doc_id"), TextOps.tokens(col("text")).as("toks")),
+      "doc_id", "toks", N)
+  }
 
   /** Candidate (da, db) pairs from the shingle inverted index, with a
     * document-frequency cap: shingles present in more than DfCap
@@ -150,10 +139,9 @@ object DedupQueries {
     * sf0.1, the costliest non-preamble dedup row); one cached frame
     * serves both. Pair-count-sized, so safe to pin.
     */
-  private def candidatesFrame(s: SparkSession, d: String): DataFrame =
-    cachedFrame(s, d, "posting_candidates") {
-      postingCandidates(shingleFrame(s, d))
-    }
+  private val candidatesFrame = SharedFrames.Frame("posting_candidates") { (s, d) =>
+    postingCandidates(shingleFrame(s, d))
+  }
 
   /** (doc_id, __n) — per-doc distinct shingle counts, computed once
     * per (session, sf) and shared by all THREE exact verifiers
@@ -162,10 +150,9 @@ object DedupQueries {
     * re-ran before r18 (§2.4 — at corpus scale that is a full pass
     * over the inverted index per verify).
     */
-  private def shingleCountsFrame(s: SparkSession, d: String): DataFrame =
-    cachedFrame(s, d, "shingle_counts") {
-      graft.ops.CorpusOps.docSetSizes(shingleFrame(s, d), "doc_id")
-    }
+  private val shingleCountsFrame = SharedFrames.Frame("shingle_counts") { (s, d) =>
+    graft.ops.CorpusOps.docSetSizes(shingleFrame(s, d), "doc_id")
+  }
 
   /** (da, db, nab, na, nb, jaccard) for the given candidate pairs,
     * verified exactly over the full (uncapped) shingle frame
@@ -184,12 +171,11 @@ object DedupQueries {
     * pass each at scale — when only the final arithmetic differs.
     * Candidate-pair-sized, so safe to pin.
     */
-  private def pairOverlapFrame(s: SparkSession, d: String): DataFrame =
-    cachedFrame(s, d, "pair_overlap") {
-      graft.ops.CorpusOps.pairOverlap(shingleFrame(s, d),
-        candidatesFrame(s, d), "doc_id",
-        counts = Some(shingleCountsFrame(s, d)))
-    }
+  private val pairOverlapFrame = SharedFrames.Frame("pair_overlap") { (s, d) =>
+    graft.ops.CorpusOps.pairOverlap(shingleFrame(s, d),
+      candidatesFrame(s, d), "doc_id",
+      counts = Some(shingleCountsFrame(s, d)))
+  }
 
   /** The verified near-dup pair set (da, db, nab, na, nb, jaccard) —
     * the df-capped exact-Jaccard ground truth, computed once per
@@ -199,35 +185,32 @@ object DedupQueries {
     * pair-count-sized (tiny) while its build is the family's most
     * expensive verify join — exactly what SharedFrames is for.
     */
-  private def pairsFrame(s: SparkSession, d: String): DataFrame =
-    cachedFrame(s, d, "verified_pairs") {
-      graft.ops.CorpusOps.jaccardFromOverlap(pairOverlapFrame(s, d), JACC)
-    }
+  private val pairsFrame = SharedFrames.Frame("verified_pairs") { (s, d) =>
+    graft.ops.CorpusOps.jaccardFromOverlap(pairOverlapFrame(s, d), JACC)
+  }
 
   /** (node, component) over the verified near-dup pair graph, computed
     * once per (session, sf): `dedup_components` reports it and
     * `dedup_keep_representatives` anti-joins the corpus against it —
     * in a real pipeline the CC labeling runs once and feeds both.
     */
-  private def componentsFrame(s: SparkSession, d: String): DataFrame =
-    cachedFrame(s, d, "dedup_components") {
-      val pairs = pairsFrame(s, d).select(col("da"), col("db"))
-      // canonicalEdges: verified pairs are DISTINCT da<db by
-      // construction (ordered_pairs + distinct), so the CC skips its
-      // defensive distinct over the symmetric edge set
-      graft.ops.Graphs.connectedComponents(pairs, "da", "db",
-        canonicalEdges = true)
-    }
+  private val componentsFrame = SharedFrames.Frame("dedup_components") { (s, d) =>
+    val pairs = pairsFrame(s, d).select(col("da"), col("db"))
+    // canonicalEdges: verified pairs are DISTINCT da<db by
+    // construction (ordered_pairs + distinct), so the CC skips its
+    // defensive distinct over the symmetric edge set
+    graft.ops.Graphs.connectedComponents(pairs, "da", "db",
+      canonicalEdges = true)
+  }
 
   /** (doc_id, minhash signature) — the K md5-min hashes over the
     * shingle ids, shared by the LSH band join and the incremental
     * ingest query. The shingle id IS the 52-bit hash — the k min
     * aggs are pure multiply-add arithmetic, no digest work at all.
     */
-  private def minhashFrame(s: SparkSession, d: String): DataFrame =
-    cachedFrame(s, d, "minhash_sig") {
-      graft.ops.CorpusOps.minhashSignatures(shingleFrame(s, d), "doc_id", K)
-    }
+  private val minhashFrame = SharedFrames.Frame("minhash_sig") { (s, d) =>
+    graft.ops.CorpusOps.minhashSignatures(shingleFrame(s, d), "doc_id", K)
+  }
 
   /** The LSH band-bucket candidate pair set at this module's
     * BANDS×(K/BANDS) config, computed once per (session, sf): the
@@ -238,52 +221,18 @@ object DedupQueries {
     * components over its verified subset. Before r17 each consumer
     * re-ran the band join (and two of them the verify join too).
     */
-  private def lshCandidatesFrame(s: SparkSession, d: String): DataFrame =
-    cachedFrame(s, d, "lsh_candidates") {
-      graft.ops.CorpusOps.lshCandidates(minhashFrame(s, d), "doc_id",
-        BANDS, K / BANDS, LshBucketCap)
-    }
+  private val lshCandidatesFrame = SharedFrames.Frame("lsh_candidates") { (s, d) =>
+    graft.ops.CorpusOps.lshCandidates(minhashFrame(s, d), "doc_id",
+      BANDS, K / BANDS, LshBucketCap)
+  }
 
   /** The exact-Jaccard-verified LSH pair set (da, db, nab, na, nb,
     * jaccard) — `dedup_minhash_lsh`'s result frame, shared with
     * `dedup_components_eval` (which re-ran the whole band+verify
     * pipeline before r17: two identical verify joins per census).
     */
-  private def lshVerifiedFrame(s: SparkSession, d: String): DataFrame =
-    cachedFrame(s, d, "lsh_verified") {
-      jaccardPairs(s, d, lshCandidatesFrame(s, d))
-    }
-
-  /** Materialize this family's shared frames up front — the Bench
-    * preamble (SparkEntry.preambles): the build cost lands on one
-    * named warm row instead of whichever consumer happens to run
-    * first alphabetically in the census (r9's recorded
-    * dedup_incremental "regression" was exactly the minhash frame
-    * build landing on it).
-    *
-    * The builds run as concurrent [[graft.Chains]] to overlap
-    * independent jobs: the frame DAG has four independent
-    * chains once the shingle frame exists (minhash→LSH bands,
-    * candidates→pairs→components, simhash, spans), and each chain is
-    * a sequence of small stages that leaves most of local[N] idle —
-    * overlapping them backfills the idle cores without changing any
-    * frame's content. Measured at sf0.1: warm_dedup_frames 13.3 → ~7 s.
-    */
-  private[graft] def warmShared(s: SparkSession, d: String): Unit = {
-    shingleFrame(s, d) // the shared root: everything below reads it
-    // the per-doc set-size census builds before the fan-out, like the
-    // root: both verify chains consume it mid-flight
-    shingleCountsFrame(s, d)
-    graft.Chains.run(s, Seq(
-      Seq("minhash_sig" -> (() => minhashFrame(s, d)),
-          "lsh_candidates" -> (() => lshCandidatesFrame(s, d)),
-          "lsh_verified" -> (() => lshVerifiedFrame(s, d))),
-      Seq("posting_candidates" -> (() => candidatesFrame(s, d)),
-          "verified_pairs" -> (() => pairsFrame(s, d)),
-          "dedup_components" -> (() => componentsFrame(s, d))),
-      Seq("simhash_sig" -> (() => simhashFrame(s, d)),
-          "hamming_pairs" -> (() => hammingPairsShared(s, d))),
-      Seq("substring_spans" -> (() => spansFrame(s, d)))))
+  private val lshVerifiedFrame = SharedFrames.Frame("lsh_verified") { (s, d) =>
+    jaccardPairs(s, d, lshCandidatesFrame(s, d))
   }
 
   /** Tokenized documents for the repeated-substring family (spans +
@@ -299,28 +248,26 @@ object DedupQueries {
     * `dedup_substring_rewrite` — the span census is the dedup family's
     * single heaviest pass (every W-token window shuffles once).
     */
-  private def spansFrame(s: SparkSession, d: String): DataFrame =
-    cachedFrame(s, d, "substring_spans") {
-      graft.ops.CorpusOps.substringSpans(spanDocs(s, d), "doc_id", "toks",
-        SpanW)
-    }
+  private val spansFrame = SharedFrames.Frame("substring_spans") { (s, d) =>
+    graft.ops.CorpusOps.substringSpans(spanDocs(s, d), "doc_id", "toks",
+      SpanW)
+  }
 
   /** (doc_id, sig) — SimBits-wide SimHash signature per document,
     * shared by the exact-cluster and hamming-radius queries.
     */
-  private def simhashFrame(s: SparkSession, d: String): DataFrame =
-    cachedFrame(s, d, "simhash_sig") {
-      // digest → 16 digit-value ints ONCE per token; the bit sums ride
-      // lane-packed (4 bit-counts per int64, one agg per hex digit —
-      // 16 aggs + a count instead of 64 ±1 sums)
-      val tok = Tables.widened(Tables.documents(s, d))
-        .select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("t"))
-        .select(col("doc_id") +: TextOps.hexDigitValues(md5(col("t")),
-          (SimBits + 3) / 4): _*)
-      val aggs = TextOps.simhashPackedAggs(SimBits)
-      tok.groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
-        .select(col("doc_id"), TextOps.simhashSigPacked(SimBits).as("sig"))
-    }
+  private val simhashFrame = SharedFrames.Frame("simhash_sig") { (s, d) =>
+    // digest → 16 digit-value ints ONCE per token; the bit sums ride
+    // lane-packed (4 bit-counts per int64, one agg per hex digit —
+    // 16 aggs + a count instead of 64 ±1 sums)
+    val tok = Tables.widened(Tables.documents(s, d))
+      .select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("t"))
+      .select(col("doc_id") +: TextOps.hexDigitValues(md5(col("t")),
+        (SimBits + 3) / 4): _*)
+    val aggs = TextOps.simhashPackedAggs(SimBits)
+    tok.groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
+      .select(col("doc_id"), TextOps.simhashSigPacked(SimBits).as("sig"))
+  }
 
   /** (doc_id, bk) — one row per (document, bit block) of the simhash
     * signature; the blocking frame for the hamming-radius join. The
@@ -359,10 +306,9 @@ object DedupQueries {
     * census before r18 (§2.4). Pair-count-sized, so safe to pin; the
     * build lands on the warm_dedup_frames row.
     */
-  private def hammingPairsShared(s: SparkSession, d: String): DataFrame =
-    cachedFrame(s, d, "hamming_pairs") {
-      hammingPairsFrame(simhashFrame(s, d))
-    }
+  private val hammingPairsShared = SharedFrames.Frame("hamming_pairs") { (s, d) =>
+    hammingPairsFrame(simhashFrame(s, d))
+  }
 
   private def hammingPairsFrame(sig: DataFrame): DataFrame = {
     val blocks0 = simBlocksFrame(sig)
@@ -383,6 +329,17 @@ object DedupQueries {
       .filter(col("dist") <= SimRadius)
       .select("da", "db", "siga", "sigb", "dist")
   }
+
+  /** The frames the Bench preamble (SparkEntry.preambles) builds up
+    * front: the build cost lands on one named warm row instead of
+    * whichever consumer happens to run first alphabetically in the
+    * census (r9's recorded dedup_incremental "regression" was exactly
+    * the minhash frame build landing on it).
+    */
+  private[graft] val sharedFrames: Seq[SharedFrames.Frame] = Seq(
+    shingleFrame, shingleCountsFrame, candidatesFrame, pairOverlapFrame,
+    pairsFrame, componentsFrame, minhashFrame, lshCandidatesFrame,
+    lshVerifiedFrame, spansFrame, simhashFrame, hammingPairsShared)
 
   val queries: Map[String, Q] = Map(
     // Exact dedup on the normalized fingerprint: one hash-shuffle

@@ -60,10 +60,9 @@ object GraphQueries {
     * the rename). Shared via [[SharedFrames]] (released at family
     * end); the loop queries must not unpersist it.
     */
-  private def symDst(s: SparkSession, d: String): DataFrame =
-    SharedFrames.cachedFrame(s, d, "graph_sym_dst") {
-      bipartite(s, d).repartition(col("dst"))
-    }
+  private val symDst = SharedFrames.Frame("graph_sym_dst") { (s, d) =>
+    bipartite(s, d).repartition(col("dst"))
+  }
 
   /** kcore's src-partitioned view of [[symDst]]: swap the endpoint
     * names on the symmetric frame instead of reshuffling it.
@@ -71,10 +70,7 @@ object GraphQueries {
   private def symSrc(s: SparkSession, d: String): DataFrame =
     symDst(s, d).select(col("dst").as("src"), col("src").as("dst"))
 
-  private[graft] def warmShared(s: SparkSession, d: String): Unit = {
-    symDst(s, d)
-    ()
-  }
+  private[graft] val sharedFrames: Seq[SharedFrames.Frame] = Seq(symDst)
 
   val queries: Map[String, Q] = Map(
     // PageRank by power iteration: r <- (1-d)/N + d * Σ r(u)/deg(u)

@@ -5,6 +5,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import scala.util.{Failure, Success, Try}
+
 /** Cross-query cached frames. The driver's Verify/Bench mains run
   * query builders back to back in one session with no per-query
   * teardown hook, so several expensive intermediates (dedup shingle
@@ -35,11 +37,14 @@ object SharedFrames {
       keep
     }
 
-  /** One cache entry. The first `frame` call builds it; concurrent
+  /** One cache entry. The first `result` call builds it; concurrent
     * callers of the same key block on the lazy val instead of building
     * a second copy whose persisted blocks would leak until `release`.
+    * A failed build fails every caller that waited on it, with an
+    * error naming the frame; [[cachedFrame]] then drops the slot, so a
+    * later call builds afresh.
     */
-  private final class Slot(build: () => DataFrame) {
+  private final class Slot(key: String, build: () => DataFrame) {
     @volatile private var built = false
     // materialize EAGERLY and fully: several builders (lineage
     // closure, connected components) are backed by localCheckpointed
@@ -48,13 +53,15 @@ object SharedFrames {
     // partitions later need recompute, would chase destroyed
     // checkpoint blocks. After count() every partition is
     // memory/disk-backed and the truncated lineage is never re-walked.
-    lazy val frame: DataFrame = {
+    lazy val result: Try[DataFrame] = Try {
       val df = build().persist(StorageLevel.MEMORY_AND_DISK)
       df.count()
       built = true
       df
+    }.recoverWith { case e =>
+      Failure(new RuntimeException(s"shared frame $key failed: $e", e))
     }
-    def unpersist(): Unit = if (built) frame.unpersist(blocking = false)
+    def unpersist(): Unit = if (built) result.get.unpersist(blocking = false)
   }
 
   /** The frame cached under (s, d, key), built by `build` on first use.
@@ -66,8 +73,32 @@ object SharedFrames {
     frameCache.filterInPlace { case ((sess, _, _), _) => !sess.sparkContext.isStopped }
     // TrieMap.getOrElseUpdate may construct a losing Slot, but only
     // the Slot it returns is ever asked for its frame
-    frameCache.getOrElseUpdate((s, d, key), new Slot(() => build)).frame
+    val slot = frameCache.getOrElseUpdate((s, d, key), new Slot(key, () => build))
+    slot.result match {
+      case Success(df) => df
+      case Failure(e) => frameCache.remove((s, d, key), slot); throw e
+    }
   }
+
+  /** The keys cached under `s`'s context (any sf dir). */
+  private[graft] def keys(s: SparkSession): Set[String] =
+    frameCache.keySet.collect { case (sess, _, key)
+      if sess.sparkContext == s.sparkContext => key }.toSet
+
+  /** A shared frame: its cache key and its build. Applying it gives
+    * the frame cached under (s, d, key).
+    */
+  final case class Frame(key: String)(build: (SparkSession, String) => DataFrame) {
+    def apply(s: SparkSession, d: String): DataFrame = cachedFrame(s, d, key)(build(s, d))
+  }
+
+  /** A family's preamble: builds all of its declared frames at once,
+    * one [[graft.Chains]] step per frame. A frame that reads another
+    * blocks on that frame's single-flight slot, so the build order
+    * follows the frames' own calls and no key is built twice.
+    */
+  def preamble(frames: Seq[Frame]): (SparkSession, String) => Unit = (s, d) =>
+    graft.Chains.run(s, frames.map(f => Seq(f.key -> (() => f(s, d)))))
 
   /** The synthetic taxonomy dimension every lineage/tree query walks:
     * region(domain) → nation(phylum) → customer(genus|species), ids
@@ -96,9 +127,8 @@ object SharedFrames {
     * an O(depth)-shuffle iterative loop, the single most expensive
     * piece those queries would otherwise each re-run.
     */
-  def taxaLineage(s: SparkSession, d: String): DataFrame =
-    cachedFrame(s, d, "taxa_lineage") {
-      graft.ops.Graphs.lineageClosure(
-        taxaDims(s, d).select(col("id"), col("parent")), "id", "parent")
-    }
+  val taxaLineage: Frame = Frame("taxa_lineage") { (s, d) =>
+    graft.ops.Graphs.lineageClosure(
+      taxaDims(s, d).select(col("id"), col("parent")), "id", "parent")
+  }
 }

@@ -32,29 +32,28 @@ object TaxaMartQueries {
     * (taxid, proteome) per protein; every fourth protein has no
     * proteome (proteomes_store.get returning None, taxa.py:74-75).
     */
-  private def proteins(s: SparkSession, d: String): DataFrame =
+  private val proteins = SharedFrames.Frame("mart_proteins") { (s, d) =>
     // cached once per (session, sf): SIX consumers re-ran the
     // orders ⋈ customer ⋈ nation cascade before r18 (matchNodes,
     // proteinNodes, and the protInfo sides of the structure/proteome
     // bundles) — the family's one fact-sized join now happens once and
     // its cost lands on the warm_taxamart_frames row (§2.4)
-    SharedFrames.cachedFrame(s, d, "mart_proteins") {
-      val o = Tables.orders(s, d).select(
-        col("o_orderkey").as("protein"), col("o_custkey"))
-      val c = Tables.customer(s, d).select(col("c_custkey"), col("c_nationkey"))
-      val n = Tables.nation(s, d).select(col("n_nationkey"), col("n_regionkey"))
-      o.join(c, col("o_custkey") === col("c_custkey"))
-        .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
-        .select(col("protein"),
-          when(col("o_custkey") % 4 =!= 0,
-            concat(lit("UP"), (col("o_custkey") % 50).cast("string")))
-            .as("proteome"),
-          col("n_regionkey"), col("c_nationkey"), col("c_custkey"),
-          array(
-            concat(lit("R"), col("n_regionkey").cast("string")),
-            concat(lit("N"), col("c_nationkey").cast("string")),
-            concat(lit("C"), col("c_custkey").cast("string"))).as("lineage"))
-    }
+    val o = Tables.orders(s, d).select(
+      col("o_orderkey").as("protein"), col("o_custkey"))
+    val c = Tables.customer(s, d).select(col("c_custkey"), col("c_nationkey"))
+    val n = Tables.nation(s, d).select(col("n_nationkey"), col("n_regionkey"))
+    o.join(c, col("o_custkey") === col("c_custkey"))
+      .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
+      .select(col("protein"),
+        when(col("o_custkey") % 4 =!= 0,
+          concat(lit("UP"), (col("o_custkey") % 50).cast("string")))
+          .as("proteome"),
+        col("n_regionkey"), col("c_nationkey"), col("c_custkey"),
+        array(
+          concat(lit("R"), col("n_regionkey").cast("string")),
+          concat(lit("N"), col("c_nationkey").cast("string")),
+          concat(lit("C"), col("c_custkey").cast("string"))).as("lineage"))
+  }
 
   /** Matches keyed by protein: db / db-prefixed entry / clan /
     * structure hit / match location (taxa.py:50-81 walks matches_store
@@ -79,25 +78,23 @@ object TaxaMartQueries {
     * "propagate to ancestors, including the taxon itself"
     * (taxa.py:207-211): one narrow fact, lineage-depth x rows.
     */
-  private def matchNodes(s: SparkSession, d: String): DataFrame =
-    SharedFrames.cachedFrame(s, d, "mart_match_nodes") {
-      // cached once per family pass: four mart/bundle queries
-      // aggregate this lineage-expanded fact, and the 600k-row join +
-      // 3x explode dominated each of them when rebuilt per query
-      // (mart_taxa_per_entry warm A/B at sf0.1: 4.0 -> ~2.4 s); the
-      // bench charges the build to warm_taxamart_frames
-      matches(s, d)
-        .join(proteins(s, d).select(col("protein"), col("lineage")),
-          "protein")
-        .select(col("protein"), col("db"), col("entry"), col("pdb"),
-          explode(col("lineage")).as("node_id"))
-    }
-
-  private def proteinNodes(s: SparkSession, d: String): DataFrame =
-    SharedFrames.cachedFrame(s, d, "mart_protein_nodes") {
-      proteins(s, d).select(col("protein"), col("proteome"),
+  private val matchNodes = SharedFrames.Frame("mart_match_nodes") { (s, d) =>
+    // cached once per family pass: four mart/bundle queries
+    // aggregate this lineage-expanded fact, and the 600k-row join +
+    // 3x explode dominated each of them when rebuilt per query
+    // (mart_taxa_per_entry warm A/B at sf0.1: 4.0 -> ~2.4 s); the
+    // bench charges the build to warm_taxamart_frames
+    matches(s, d)
+      .join(proteins(s, d).select(col("protein"), col("lineage")),
+        "protein")
+      .select(col("protein"), col("db"), col("entry"), col("pdb"),
         explode(col("lineage")).as("node_id"))
-    }
+  }
+
+  private val proteinNodes = SharedFrames.Frame("mart_protein_nodes") { (s, d) =>
+    proteins(s, d).select(col("protein"), col("proteome"),
+      explode(col("lineage")).as("node_id"))
+  }
 
   /** Per-node protein totals + distinct-proteome counts — the
     * identical full aggregation over [[proteinNodes]] that THREE
@@ -106,33 +103,23 @@ object TaxaMartQueries {
     * output, so the cache is tiny while each rebuild was a full pass
     * over the lineage-exploded protein fact (§2.4).
     */
-  private def nodeProteinStats(s: SparkSession, d: String): DataFrame =
-    SharedFrames.cachedFrame(s, d, "mart_node_protein_stats") {
-      proteinNodes(s, d).groupBy(col("node_id")).agg(
-        count(lit(1)).as("num_proteins"),
-        countDistinct(col("proteome")).as("n_proteomes"))
-    }
+  private val nodeProteinStats = SharedFrames.Frame("mart_node_protein_stats") { (s, d) =>
+    proteinNodes(s, d).groupBy(col("node_id")).agg(
+      count(lit(1)).as("num_proteins"),
+      countDistinct(col("proteome")).as("n_proteomes"))
+  }
 
   /** Per-node distinct-structure counts over [[matchNodes]] — shared
     * by xref_taxon_bundle and mart_taxa_counts (each re-aggregated the
     * lineage-exploded match fact before r18); node-sized output.
     */
-  private def nodeStructures(s: SparkSession, d: String): DataFrame =
-    SharedFrames.cachedFrame(s, d, "mart_node_structures") {
-      matchNodes(s, d).groupBy(col("node_id"))
-        .agg(countDistinct(col("pdb")).as("n_structures"))
-    }
-
-  private[graft] def warmShared(s: SparkSession, d: String): Unit = {
-    // the proteins frame is the shared root of BOTH chains — built
-    // before the fan-out, then the two explode+persist chains overlap
-    proteins(s, d)
-    graft.Chains.run(s, Seq(
-      Seq("mart_match_nodes" -> (() => matchNodes(s, d)),
-          "mart_node_structures" -> (() => nodeStructures(s, d))),
-      Seq("mart_protein_nodes" -> (() => proteinNodes(s, d)),
-          "mart_node_protein_stats" -> (() => nodeProteinStats(s, d)))))
+  private val nodeStructures = SharedFrames.Frame("mart_node_structures") { (s, d) =>
+    matchNodes(s, d).groupBy(col("node_id"))
+      .agg(countDistinct(col("pdb")).as("n_structures"))
   }
+
+  private[graft] val sharedFrames: Seq[SharedFrames.Frame] = Seq(
+    proteins, matchNodes, nodeStructures, proteinNodes, nodeProteinStats)
 
   val queries: Map[String, Q] = Map(
     // taxon2xrefs end-to-end (xrefs/taxa.py:44-260): per taxon node

@@ -43,15 +43,12 @@ object TextQueries {
     * per-query doc-bigram census still streams its explode directly
     * (see [[bigramStream]]).
     */
-  private def bigramModelFrame(s: SparkSession, d: String): DataFrame =
-    SharedFrames.cachedFrame(s, d, "text_bigram_model") {
-      bigramStream(s, d).groupBy(col("w1"), col("w2"))
-        .agg(count(lit(1)).as("nab"))
-    }
-
-  private[graft] def warmShared(s: SparkSession, d: String): Unit = {
-    bigramModelFrame(s, d); ()
+  private val bigramModelFrame = SharedFrames.Frame("text_bigram_model") { (s, d) =>
+    bigramStream(s, d).groupBy(col("w1"), col("w2"))
+      .agg(count(lit(1)).as("nab"))
   }
+
+  private[graft] val sharedFrames: Seq[SharedFrames.Frame] = Seq(bigramModelFrame)
 
   /** Shared trigram-profile classifier: per-language top-20 trigram
     * profiles learned from `trainOn(docTris)` (the full corpus or a

@@ -64,23 +64,22 @@ object VectorQueries {
     * computed as DECIMAL(18,9) sums (exact, order-independent) cast to
     * double for the single final division — one deterministic FP op.
     */
-  private def ivfCentroids(s: SparkSession, d: String): DataFrame =
-    SharedFrames.cachedFrame(s, d, "ivf_kmeans_centroids") {
-      val emb = embFrame(s, d)
-      val cents0 = emb.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("cid"), col("v").as("cv"), col("nv").as("cn"))
-      val asg0 = assign(emb, cents0, 1)
-      val comp = asg0
-        .select(col("cell"), posexplode(col("v")).as(Seq("pos", "val")))
-        .groupBy(col("cell"), col("pos"))
-        .agg((sum(col("val").cast(DecimalType(18, 9))).cast("double") /
-          count(lit(1))).as("m"))
-      comp.groupBy(col("cell"))
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
-          x => x("m")).as("cv"))
-        .select(col("cell").as("cid"), col("cv"),
-          VectorOps.norm(col("cv")).as("cn"))
-    }
+  private val ivfCentroids = SharedFrames.Frame("ivf_kmeans_centroids") { (s, d) =>
+    val emb = embFrame(s, d)
+    val cents0 = emb.filter(col("vec_id") < 8)
+      .select(col("vec_id").as("cid"), col("v").as("cv"), col("nv").as("cn"))
+    val asg0 = assign(emb, cents0, 1)
+    val comp = asg0
+      .select(col("cell"), posexplode(col("v")).as(Seq("pos", "val")))
+      .groupBy(col("cell"), col("pos"))
+      .agg((sum(col("val").cast(DecimalType(18, 9))).cast("double") /
+        count(lit(1))).as("m"))
+    comp.groupBy(col("cell"))
+      .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
+        x => x("m")).as("cv"))
+      .select(col("cell").as("cid"), col("cv"),
+        VectorOps.norm(col("cv")).as("cn"))
+  }
 
   /** IVF with one Lloyd refinement round: queries probe their
     * `nprobe` nearest refined cells, the corpus lives in one. More
@@ -233,21 +232,19 @@ object VectorQueries {
     * codebook trains on a hash-sampled slice (standard PQ practice),
     * not the full corpus, so this stage never scales with the data.
     */
-  private def pqCodebook(s: SparkSession, d: String): DataFrame =
-    SharedFrames.cachedFrame(s, d, "pq_codebook") {
-      val seed = subFrame(s, d).filter(col("vec_id") < NCodes)
-        .select(col("m"), col("vec_id").as("code"), col("sv").as("cv"))
-      VectorOps.pqTrainCodebook(subFrame(s, d), seed, "vec_id")
-    }
+  private val pqCodebook = SharedFrames.Frame("pq_codebook") { (s, d) =>
+    val seed = subFrame(s, d).filter(col("vec_id") < NCodes)
+      .select(col("m"), col("vec_id").as("code"), col("sv").as("cv"))
+    VectorOps.pqTrainCodebook(subFrame(s, d), seed, "vec_id")
+  }
 
   /** The encoded corpus (vec_id, m, code) against the refined
     * codebook — 4 small ints per vector, the cheapest frame in the
     * family to pin; both PQ queries consume it.
     */
-  private def pqEncoded(s: SparkSession, d: String): DataFrame =
-    SharedFrames.cachedFrame(s, d, "pq_codes") {
-      VectorOps.pqEncode(subFrame(s, d), pqCodebook(s, d), "vec_id")
-    }
+  private val pqEncoded = SharedFrames.Frame("pq_codes") { (s, d) =>
+    VectorOps.pqEncode(subFrame(s, d), pqCodebook(s, d), "vec_id")
+  }
 
   /** ADC search: per query, a NSub×NCodes distance lookup table
     * (3 200 rows for 50 queries — broadcast) fed to
@@ -260,14 +257,6 @@ object VectorQueries {
     VectorOps.pqSearchTopK(pqEncoded(s, d), dtab, "vec_id", 5)
   }
 
-  /** Materialize this family's shared frames up front — the Bench
-    * preamble (SparkEntry.preambles): refined IVF centroids, the PQ
-    * codebook, and the encoded PQ corpus all feed several queries
-    * each, and building them here puts the cost on one named warm
-    * row instead of the family's alphabetically-first consumer
-    * (r9 recorded ann_int8... / ann_ivf_kmeans_topk noise was this
-    * attribution).
-    */
   /** The corpus gram matrix (d(d+1)/2 rows — metadata-sized at any
     * corpus scale while its build is a full corpus pass): embed_gram
     * reports it and embed_corr assembles the correlation matrix from
@@ -275,10 +264,9 @@ object VectorQueries {
     * full-corpus moment passes (§2.4 — a real pipeline runs PCA and
     * the redundancy report off ONE gram).
     */
-  private def gramFrame(s: SparkSession, d: String): DataFrame =
-    SharedFrames.cachedFrame(s, d, "pca_gram") {
-      graft.ops.Pca.gram(Tables.embeddings(s, d), "embedding", Dim)
-    }
+  private val gramFrame = SharedFrames.Frame("pca_gram") { (s, d) =>
+    graft.ops.Pca.gram(Tables.embeddings(s, d), "embedding", Dim)
+  }
 
   /** The exact cosine top-5 ground truth for the 50 eval queries —
     * a 250-row frame whose build is a 50×corpus broadcast-streamed
@@ -287,24 +275,16 @@ object VectorQueries {
     * three union arms each re-ran the whole pass before this frame
     * existed (5 builds per census → 1).
     */
-  private def bfCos5Frame(s: SparkSession, d: String): DataFrame =
-    SharedFrames.cachedFrame(s, d, "bf_cos_top5") {
-      val emb = Tables.embeddings(s, d)
-      val q = emb.filter(col("vec_id") < 50)
-        .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-      VectorOps.bruteForceTopK(q, emb, "qid", "vec_id", "qe", "embedding", 5)
-        .select(col("qid"), col("vec_id"), col("sim"), col("rk"))
-    }
+  private val bfCos5Frame = SharedFrames.Frame("bf_cos_top5") { (s, d) =>
+    val emb = Tables.embeddings(s, d)
+    val q = emb.filter(col("vec_id") < 50)
+      .select(col("vec_id").as("qid"), col("embedding").as("qe"))
+    VectorOps.bruteForceTopK(q, emb, "qid", "vec_id", "qe", "embedding", 5)
+      .select(col("qid"), col("vec_id"), col("sim"), col("rk"))
+  }
 
-  private[graft] def warmShared(s: SparkSession, d: String): Unit =
-    // independent chains (embFrame/subFrame roots are plain
-    // expressions, not cached) — overlap them
-    graft.Chains.run(s, Seq(
-      Seq("ivf_kmeans_centroids" -> (() => ivfCentroids(s, d))),
-      Seq("pq_codebook" -> (() => pqCodebook(s, d)),
-          "pq_codes" -> (() => pqEncoded(s, d))),
-      Seq("pca_gram" -> (() => gramFrame(s, d))),
-      Seq("bf_cos_top5" -> (() => bfCos5Frame(s, d)))))
+  private[graft] val sharedFrames: Seq[SharedFrames.Frame] = Seq(
+    ivfCentroids, pqCodebook, pqEncoded, gramFrame, bfCos5Frame)
 
   val queries: Map[String, Q] = Map(
     // Raw second-moment (gram) matrix of the embedding corpus — the

@@ -68,4 +68,51 @@ class ChainsSpec extends SparkSpec {
     assert(rows.asScala.toSeq === Seq(10L, 10L))
     assert(builds.get === 1)
   }
+
+  test("a frame that reads another step's frame waits for it, and it builds once") {
+    val builds = new AtomicInteger
+    val id = java.util.UUID.randomUUID()
+    val a = SharedFrames.Frame(s"a_$id") { (s, _) =>
+      builds.incrementAndGet()
+      Thread.sleep(500) // hold the build open while b asks for it
+      s.range(10).toDF()
+    }
+    val b = SharedFrames.Frame(s"b_$id") { (s, d) => a(s, d).filter("id % 2 = 0") }
+    // preamble = one Chains.run, one step per frame
+    SharedFrames.preamble(Seq(a, b))(spark, sf)
+    assert(builds.get === 1)
+    assert(SharedFrames.keys(spark).contains(a.key))
+    assert(SharedFrames.keys(spark).contains(b.key))
+    assert(b(spark, sf).count() === 5)
+  }
+
+  test("a failing frame fails the run fast, named, with no Spark job left") {
+    val builds = new AtomicInteger
+    val id = java.util.UUID.randomUUID()
+    val a = SharedFrames.Frame(s"a_$id") { (s, _) =>
+      builds.incrementAndGet()
+      Thread.sleep(500) // b is waiting on this build by now
+      s.createDataFrame(s.sparkContext.parallelize(1 to 4, 4).map { i =>
+        Thread.sleep(1000)
+        if (i == 1) throw new IllegalStateException("boom")
+        Tuple1(i)
+      })
+    }
+    val b = SharedFrames.Frame(s"b_$id") { (s, d) => a(s, d).filter("_1 > 2") }
+    val t0 = System.nanoTime()
+    val e = intercept[RuntimeException](SharedFrames.preamble(Seq(a, b))(spark, sf))
+    val secs = (System.nanoTime() - t0) / 1e9
+    assert(e.getMessage.contains(s"shared frame ${a.key} failed"))
+    assert(e.getMessage.contains("boom"))
+    assert(secs < 60, s"took $secs s")
+    // b got a's failure instead of building a second copy
+    assert(builds.get === 1)
+    // a failed frame is not cached: the next caller builds it afresh
+    assert(!SharedFrames.keys(spark).contains(a.key))
+    val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(30)
+    while (spark.sparkContext.statusTracker.getActiveJobIds.nonEmpty &&
+           System.nanoTime() < deadline) Thread.sleep(100)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty,
+      "a Spark job is still running")
+  }
 }
