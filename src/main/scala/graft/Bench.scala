@@ -1,6 +1,32 @@
 package graft
+
+import java.nio.file.{Files, Path, Paths}
+
 object Bench {
+
+  /** The checked-out commit, read from `.git` in the working directory
+    * without running git; a worktree's `.git` file names its git dir,
+    * whose `commondir` holds the shared refs. None outside a checkout.
+    */
+  def gitSha(root: Path = Paths.get("").toAbsolutePath): Option[String] = {
+    def read(p: Path): Option[String] =
+      if (Files.isRegularFile(p)) Some(Files.readString(p).trim) else None
+    val dot = root.resolve(".git")
+    val gitDir = read(dot).map(f => root.resolve(f.stripPrefix("gitdir:").trim)).getOrElse(dot)
+    val common = read(gitDir.resolve("commondir")).map(gitDir.resolve).getOrElse(gitDir)
+    read(gitDir.resolve("HEAD")).flatMap { head =>
+      if (!head.startsWith("ref:")) Some(head)
+      else {
+        val ref = head.stripPrefix("ref:").trim
+        read(gitDir.resolve(ref)).orElse(read(common.resolve(ref))).orElse(
+          read(common.resolve("packed-refs")).flatMap(_.linesIterator.map(_.split(" "))
+            .collectFirst { case Array(sha, r) if r == ref => sha }))
+      }
+    }
+  }
+
   def main(args: Array[String]): Unit = {
+    val started = java.time.Instant.now().truncatedTo(java.time.temporal.ChronoUnit.SECONDS)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = SparkLocal.session(sfDir)
     // hypervisor-steal gauge: on a shared host the guest's wall times
@@ -123,7 +149,12 @@ object Bench {
       (b0, s0) <- ticks0; (b1, s1) <- cpuTicks(); if b1 > b0
     } yield (s1 - s0) * 1000 / (b1 - b0)
     val stealJson = stealPm.map(v => s""","steal_pm":$v""").getOrElse("")
-    val full = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failedJson,"spill_mb":$totalSpillMb,"heap_mb":${Runtime.getRuntime.maxMemory() >> 20}$stealJson,"sf":"$sfDir"}"""
+    // run identity: which code ran, on how many cores, over which rows, when
+    val identity = gitSha().map(sha => s""","git_sha":"$sha"""").getOrElse("") +
+      s""","cpus":${spark.sparkContext.defaultParallelism}""" +
+      s""","only":${only.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")}""" +
+      s""","start":"$started""""
+    val full = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failedJson,"spill_mb":$totalSpillMb,"heap_mb":${Runtime.getRuntime.maxMemory() >> 20}$stealJson,"sf":"$sfDir"$identity}"""
     // the driver stores only the last ~2000 log chars, which the full
     // per-query map exceeds — persist it to a repo file and keep the
     // FINAL stdout line compact enough to always fit the tail capture.

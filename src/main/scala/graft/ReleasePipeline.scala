@@ -11,8 +11,8 @@ import org.apache.spark.sql.functions._
   * reads it back — the same restart-at-task-granularity the reference
   * gets from its workflow DB, with lineage truncation for free. Like
   * the reference's runner, which starts every task whose inputs are
-  * ready, the build runs its independent stages concurrently
-  * ([[Chains]]). Run: `graft.ReleasePipeline <sfDir> <outDir>`.
+  * ready, each stage declares the stages it reads and starts as soon
+  * as they are done ([[Chains]]). Run: `graft.ReleasePipeline <sfDir> <outDir>`.
   */
 object ReleasePipeline {
 
@@ -22,16 +22,18 @@ object ReleasePipeline {
     // into outDir before any Spark write would have created it
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     val counts = scala.collection.concurrent.TrieMap.empty[String, Long]
-    // a parquet stage's read-back, which the stage after it in its chain
-    // reuses (each parquet read runs a schema-inference job)
+    // a parquet stage's read-back, which the stages that read it reuse
     val outputs = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
     // a stage writes its output, then records the rows read back from it
-    def stage(name: String)(write: => Unit)(readBack: => Long): Chains.Step =
-      name -> (() => { write; counts(name) = readBack })
-    def parquet(name: String)(df: => DataFrame): Chains.Step =
-      stage(name)(df.write.mode("overwrite").parquet(s"$outDir/$name")) {
-        outputs(name) = spark.read.parquet(s"$outDir/$name")
-        outputs(name).count()
+    def stage(name: String, after: String*)(write: => Unit)(readBack: => Long): Chains.Step =
+      Chains.step(name, after: _*) { write; counts(name) = readBack }
+    // read back with the schema just written: no schema-inference job
+    def parquet(name: String, after: String*)(df: => DataFrame): Chains.Step =
+      Chains.step(name, after: _*) {
+        val written = df
+        written.write.mode("overwrite").parquet(s"$outDir/$name")
+        outputs(name) = spark.read.schema(written.schema).parquet(s"$outDir/$name")
+        counts(name) = outputs(name).count()
       }
 
     val stages = Seq(
@@ -46,7 +48,7 @@ object ReleasePipeline {
       //     hand-rolls through temp files — then read back through the
       //     footer index (a consumer fetching one protein's matches
       //     prunes to one file + one gzip bucket).
-      stage("protein2matches_kv")(
+      stage("protein2matches_kv", "protein2matches")(
         outputs("protein2matches").write.format("graftkv").option("bucketsize", 1024)
           .mode("overwrite").save(s"$outDir/protein2matches_kv"))(
         spark.read.format("graftkv").load(s"$outDir/protein2matches_kv").count()),
@@ -60,7 +62,7 @@ object ReleasePipeline {
       // 3. webfront marts: counts-JSON per entry + release stats +
       //    release-notes diff + per-entry taxonomy distribution trees +
       //    clan relationship graphs + the signature hierarchy check
-      parquet("webfront_entry")(
+      parquet("webfront_entry", "entry2xrefs")(
         XrefQueries.queries("mart_entry_counts")(spark, sfDir)
           .join(outputs("entry2xrefs").select(col("entry_acc"), col("n_matches")),
             Seq("entry_acc"), "left")),
@@ -94,13 +96,8 @@ object ReleasePipeline {
           SinkQueries.queries("fanout_docs")(spark, sfDir), s"$outDir/es_docs"))(
         spark.read.text(s"$outDir/es_docs/part-*").count()))
 
-    // the release DAG's only two edges: a dependent stage runs after
-    // its input in one chain; every other stage is a chain of its own
-    val inputOf = Map("protein2matches_kv" -> "protein2matches",
-                      "webfront_entry" -> "entry2xrefs")
-    Chains.run(spark, stages.filterNot(st => inputOf.contains(st._1)).map(root =>
-      root +: stages.filter(st => inputOf.get(st._1).contains(root._1))))
-    stages.map { case (name, _) => name -> counts(name) }
+    Chains.run(spark, stages)
+    stages.map(st => st.name -> counts(st.name))
   }
 
   def main(args: Array[String]): Unit =

@@ -1,21 +1,52 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the harness tables (see TESTDATA.md / FIXTURES.md §A).
   *
   * Each table is a single parquet file per scale-factor directory. All
   * queries go through these so that scans stay column-prunable and
-  * filter-pushdown-friendly (never cache here; let each query's plan
-  * prune its own columns).
+  * filter-pushdown-friendly (never cache data here; let each query's
+  * plan prune its own columns).
+  *
+  * Only each table's schema is cached: a plain parquet read runs a
+  * schema-inference Spark job every time. A cached schema is reused
+  * while the path, the name, length and modification time of every
+  * file under it, and the session's explicitly set
+  * `spark.sql.parquet.*` / `spark.sql.legacy.parquet.*` confs (which
+  * decide how a parquet type surfaces, e.g. `nanosAsLong` in
+  * [[events]]) all stay the same; a change to any of them infers again.
   */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  private final case class SchemaKey(path: String, files: Seq[(String, Long, Long)],
+                                     confs: Seq[(String, String)])
+  /** One inferred schema; concurrent loads of one key infer it once. */
+  private final class Inferred(infer: => StructType) { lazy val schema: StructType = infer }
+  private val schemas = scala.collection.concurrent.TrieMap.empty[SchemaKey, Inferred]
+
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val listing = fs.listFiles(root, true)
+    val files = Iterator.continually(listing).takeWhile(_.hasNext).map(_.next())
+      .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toSeq.sorted
+    val confs = spark.conf.getAll.toSeq.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.") }.sorted
+    val key = SchemaKey(path, files, confs)
+    val inferred = schemas.getOrElse(key, {
+      // a rewritten table's old entries can never match again
+      schemas.filterInPlace { case (k, _) => k.path != path || k.files == files }
+      schemas.getOrElseUpdate(key, new Inferred(spark.read.parquet(path).schema))
+    })
+    spark.read.schema(inferred.schema).parquet(path)
+  }
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = load(s, d, "nation")

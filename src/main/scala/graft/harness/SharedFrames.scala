@@ -98,7 +98,7 @@ object SharedFrames {
     * follows the frames' own calls and no key is built twice.
     */
   def preamble(frames: Seq[Frame]): (SparkSession, String) => Unit = (s, d) =>
-    graft.Chains.run(s, frames.map(f => Seq(f.key -> (() => f(s, d)))))
+    graft.Chains.run(s, frames.map(f => graft.Chains.step(f.key)(f(s, d))))
 
   /** The synthetic taxonomy dimension every lineage/tree query walks:
     * region(domain) → nation(phylum) → customer(genus|species), ids

@@ -23,6 +23,19 @@ object SinkQueries {
   // auditable, large enough to exercise the per-shard parallel write
   private val JsonlShards = 8
 
+  /** The read-back schema of a gzip JSONL shard sink (`doc_id`, `pos`,
+    * `text`, `lang` in each line, `shard` from the partition directory).
+    * Declared, not inferred: inference on a schemaless json read is a
+    * full extra pass over every gzip shard before the real scan. Longs
+    * parse as longs, the shard partition column as int.
+    */
+  val JsonlShardSchema: org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(StructField("doc_id", LongType), StructField("pos", LongType),
+      StructField("text", StringType), StructField("lang", StringType),
+      StructField("shard", IntegerType)))
+  }
+
   /** Synthetic raw InterProScan matches carrying the FULL default-
     * shape location fields the lookup formatters select from
     * (interpro/lookup.py:231-266): protein=order, member library from
@@ -125,27 +138,13 @@ object SinkQueries {
         .hint("rebalance", col("shard"))
         .write.mode("overwrite").partitionBy("shard")
         .option("compression", "gzip").json(s"$outDir/data")
-      // explicit read-back schema (§6): schema INFERENCE on a
-      // schemaless json read is a full extra pass over every gzip
-      // shard before the real scan — the written schema is known
-      // statically, so declare it and read the data once. Same rows,
-      // same types (longs parse as longs, shard partition col as int).
-      val readSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("pos",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("text",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("lang",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("shard",
-          org.apache.spark.sql.types.IntegerType)))
+      // explicit read-back schema (§6): the written schema is known
+      // statically, so the data is read once, with no inference pass
       // FAILFAST (advice r17): with an explicit schema under the
       // default PERMISSIVE mode a corrupt or type-mismatched record
       // would silently null into the manifest — the round trip this
       // row exists to certify must fail loudly instead.
-      s.read.schema(readSchema).option("mode", "FAILFAST")
+      s.read.schema(JsonlShardSchema).option("mode", "FAILFAST")
         .json(s"$outDir/data")
         .groupBy(col("shard").cast("int").as("shard"))
         .agg(count(lit(1)).as("n_docs"),

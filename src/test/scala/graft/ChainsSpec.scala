@@ -6,10 +6,12 @@ import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 
-/** Concurrent chains (the release build, the shared-frame warm-ups)
-  * and the single-flight frame cache they rely on.
+/** The step DAG (the release and corpus builds, the shared-frame
+  * warm-ups) and the single-flight frame cache the warm-ups rely on.
   */
 class ChainsSpec extends SparkSpec {
+
+  import Chains.step
 
   test("chains run concurrently, each one's steps in order") {
     // each chain waits for the other: run one after another, both would
@@ -19,24 +21,75 @@ class ChainsSpec extends SparkSpec {
     val log = new ConcurrentLinkedQueue[String]
     def meet(): Unit = { both.countDown(); met.add(both.await(30, TimeUnit.SECONDS)) }
     Chains.run(spark, Seq(
-      Seq("a1" -> (() => log.add("a1")), "a2" -> (() => meet()), "a3" -> (() => log.add("a3"))),
-      Seq("b1" -> (() => meet()))))
+      step("a1") { Thread.sleep(200); log.add("a1") },
+      step("a2", "a1") { meet(); log.add("a2") },
+      step("a3", "a2")(log.add("a3")),
+      step("b1")(meet())))
     assert(met.asScala.toSeq === Seq(true, true))
-    assert(log.asScala.toSeq === Seq("a1", "a3"))
+    assert(log.asScala.toSeq === Seq("a1", "a2", "a3"))
+  }
+
+  test("a step starts only after all of its inputs, and independent steps overlap") {
+    // a diamond: left and right both read root and meet each other
+    // (they must overlap), join reads both
+    val both = new CountDownLatch(2)
+    val met = new ConcurrentLinkedQueue[Boolean]
+    val log = new ConcurrentLinkedQueue[String]
+    def meet(name: String): Unit = {
+      both.countDown()
+      met.add(both.await(30, TimeUnit.SECONDS))
+      if (name == "left") Thread.sleep(500) // right finishes first
+      log.add(s"$name done")
+    }
+    Chains.run(spark, Seq(
+      step("join", "left", "right")(log.add("join start")),
+      step("left", "root")(meet("left")),
+      step("right", "root")(meet("right")),
+      step("root") { Thread.sleep(300); log.add("root done") }))
+    assert(met.asScala.toSeq === Seq(true, true))
+    assert(log.asScala.toSeq ===
+      Seq("root done", "right done", "left done", "join start"))
+  }
+
+  test("a failing input is named and its dependents never run") {
+    val ran = new ConcurrentLinkedQueue[String]
+    val e = intercept[RuntimeException] {
+      Chains.run(spark, Seq(
+        step("bad_input") { Thread.sleep(300); throw new IllegalStateException("boom") },
+        step("dependent", "bad_input")(ran.add("dependent")),
+        step("second_hop", "dependent")(ran.add("second_hop")),
+        step("with_a_fine_input", "fine", "bad_input")(ran.add("with_a_fine_input")),
+        step("fine")(ran.add("fine"))))
+    }
+    assert(e.getMessage.contains("bad_input failed"))
+    assert(e.getMessage.contains("boom"))
+    assert(ran.asScala.toSeq === Seq("fine"))
+  }
+
+  test("an undeclared input or a cycle fails, named, without running a step") {
+    val ran = new AtomicInteger
+    val undeclared = intercept[IllegalArgumentException](Chains.run(spark, Seq(
+      step("a", "nowhere")(ran.incrementAndGet()))))
+    assert(undeclared.getMessage.contains("a reads undeclared step nowhere"))
+    val cycle = intercept[IllegalArgumentException](Chains.run(spark, Seq(
+      step("free")(ran.incrementAndGet()),
+      step("x", "y")(ran.incrementAndGet()), step("y", "x")(ran.incrementAndGet()))))
+    assert(cycle.getMessage.contains("dependency cycle: x, y"))
+    assert(ran.get === 1) // only the step outside the cycle
   }
 
   test("a failing step is named and cancels its siblings' Spark jobs") {
     val t0 = System.nanoTime()
     val e = intercept[RuntimeException] {
       Chains.run(spark, Seq(
-        Seq("fine_step" -> (() => ()),
-            "failing_step" -> (() => {
-              Thread.sleep(1000) // the sibling's job is running by now
-              throw new IllegalStateException("boom")
-            })),
-        Seq("slow_sibling" -> (() =>
+        step("fine_step")(()),
+        step("failing_step", "fine_step") {
+          Thread.sleep(1000) // the sibling's job is running by now
+          throw new IllegalStateException("boom")
+        },
+        step("slow_sibling")(
           spark.sparkContext.parallelize(1 to 4, 4)
-            .map { i => Thread.sleep(120000); i }.count()))))
+            .map { i => Thread.sleep(120000); i }.count())))
     }
     val secs = (System.nanoTime() - t0) / 1e9
     assert(e.getMessage.contains("failing_step"))

@@ -12,9 +12,19 @@ import java.nio.file.Files
   */
 class CorpusPipelineSpec extends SparkSpec {
 
+  // a directory that does not exist yet: the stages run as a DAG, so
+  // whichever writes first creates it
+  private lazy val out =
+    Files.createTempDirectory("graft-corpus").resolve("out").toString
+  private lazy val built = CorpusPipeline.build(spark, sf, out)
+
   test("corpus pipeline runs end-to-end with consistent stages") {
-    val out = Files.createTempDirectory("graft-corpus").toString
-    val stages = CorpusPipeline.build(spark, sf, out).toMap
+    // declared order, whatever order the concurrent stages finished in
+    assert(built.map(_._1) === Seq("corpus_raw", "corpus_normalized",
+      "corpus_filtered", "neardup_pairs", "corpus_deduped", "contaminated",
+      "corpus_clean", "corpus_rewritten", "corpus_sampled", "corpus_stats",
+      "corpus_shards", "corpus_kv", "corpus_jsonl"))
+    val stages = built.toMap
 
     assert(stages("corpus_raw") > 0)
     assert(stages("corpus_normalized") === stages("corpus_raw"),
@@ -71,5 +81,34 @@ class CorpusPipelineSpec extends SparkSpec {
     val stats = spark.read.parquet(s"$out/corpus_stats")
     assert(stats.count() ===
       sampled.select(col("lang")).distinct().count())
+  }
+
+  test("the jsonl read-back fails on a corrupt or mistyped line") {
+    val jsonl = java.nio.file.Paths.get(s"$out/corpus_jsonl")
+    assert(CorpusPipeline.jsonlRows(spark, jsonl.toString) === built.toMap.apply("corpus_jsonl"))
+    // a copy of the shard dirs with one bad line added to one shard
+    def withLine(line: String): String = {
+      val copy = Files.createTempDirectory("graft-jsonl-copy").resolve("corpus_jsonl")
+      Files.walk(jsonl).forEach { p =>
+        val to = copy.resolve(jsonl.relativize(p).toString)
+        if (Files.isDirectory(p)) Files.createDirectories(to) else Files.copy(p, to)
+      }
+      val shard = Files.list(copy).filter(_.getFileName.toString.startsWith("shard="))
+        .findFirst().get()
+      val gz = new java.util.zip.GZIPOutputStream(
+        Files.newOutputStream(shard.resolve("part-99999-bad.json.gz")))
+      try gz.write(("{\"doc_id\":1,\"pos\":1,\"text\":\"ok\",\"lang\":\"en\"}\n" + line + "\n")
+        .getBytes("UTF-8"))
+      finally gz.close()
+      copy.toString
+    }
+    for (bad <- Seq("{\"doc_id\":2,\"pos\":2,\"text\":\"cut off",
+                    "{\"doc_id\":\"three\",\"pos\":3,\"text\":\"t\",\"lang\":\"en\"}",
+                    "{\"doc_id\":4,\"pos\":4.5,\"text\":\"t\",\"lang\":\"en\"}")) {
+      val e = intercept[Exception](CorpusPipeline.jsonlRows(spark, withLine(bad)))
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains("FAILFAST")),
+        s"not a FAILFAST parse error for $bad: $e")
+    }
   }
 }
