@@ -1,7 +1,7 @@
 package graft
 
 import graft.sources.VectorIndex
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -100,21 +100,13 @@ object RetrievalPipeline {
     val rrPath = new org.apache.hadoop.fs.Path(rrOut)
     rrPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .delete(rrPath, true)
-    val qStream = spark.readStream.schema(emb.schema).parquet(inbox)
-    val sq = qStream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty)
-          VectorIndex.searchRerank(batch.sparkSession, s"$outDir/index",
-              batch, "vec_id", "embedding",
-              Tables.embeddings(batch.sparkSession, sfDir),
-              NProbe, shortK = 25, k = TopK)
-            .write.mode("append").parquet(s"$rrOut/data")
-        ()
-      }
-      .option("checkpointLocation", s"$rrOut/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    sq.awaitTermination()
-    val reranked = spark.read.parquet(s"$rrOut/data")
+    val reranked = graft.streaming.Drain.foreachBatch(spark, "retrieval_rerank",
+        spark.readStream.schema(emb.schema).parquet(inbox),
+        s"$rrOut/data", s"$rrOut/ckpt")(batch =>
+      VectorIndex.searchRerank(batch.sparkSession, s"$outDir/index",
+        batch, "vec_id", "embedding",
+        Tables.embeddings(batch.sparkSession, sfDir),
+        NProbe, shortK = 25, k = TopK))
     stages += "stream_rerank_results" -> reranked.count()
 
     // 6. re-rank recall@5 vs the exact double-precision L2 truth over

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 import scala.concurrent.duration._
@@ -12,11 +11,12 @@ import scala.concurrent.duration._
   * documented bounds actually bound).
   *
   * Each shape gets a synthetic inbox of one parquet file per
-  * micro-batch (maxFilesPerTrigger=1 + AvailableNow = one batch per
-  * file, mtimes pinned ascending so the file source preserves batch
-  * order), with event time advancing across batches so watermark/TTL
-  * eviction actually fires. Key populations are chosen per shape to
-  * test the DOCUMENTED bound:
+  * micro-batch (maxFilesPerTrigger=1 under a run-to-completion
+  * [[graft.streaming.Drain]] = one batch per file, mtimes pinned
+  * ascending so the file source preserves batch order), with event
+  * time advancing across batches so watermark/TTL eviction actually
+  * fires. Key populations are chosen per shape to test the DOCUMENTED
+  * bound:
   *   - population-bounded shapes (sessionize, funnel, cdc, cusum) run
   *     a fixed key universe → state rows must PLATEAU at the universe;
   *   - the TTL'd dedup index runs CHURNING content (fresh vocabulary
@@ -71,19 +71,13 @@ object StateSoak {
       val sess = spark.newSession()
       val src = sess.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(inbox.toString)
-      val out = build(src)
-      val q = out.writeStream.format("parquet")
-        .option("path", s"$dir/data")
-        .option("checkpointLocation", s"$dir/ckpt")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val probes = q.recentProgress.toSeq
+      val probes = graft.streaming.Drain.toParquet(s"soak_$shape", build(src),
+          s"$dir/data", s"$dir/ckpt")
         .filter(_.stateOperators.nonEmpty)
         .map(p => Probe(p.batchId,
           p.stateOperators.map(_.numRowsTotal).sum,
           p.stateOperators.map(_.memoryUsedBytes).sum))
         .sortBy(_.batchId)
-      sess.streams.resetTerminated()
       def quart(k: Int, f: Probe => Long): Long = {
         val n = probes.length
         val slice = probes.slice(n * (k - 1) / 4, n * k / 4)

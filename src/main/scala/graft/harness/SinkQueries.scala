@@ -1,6 +1,7 @@
 package graft.harness
 
 import graft.Tables
+import graft.streaming.Drain
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -35,6 +36,23 @@ object SinkQueries {
       StructField("text", StringType), StructField("lang", StringType),
       StructField("shard", IntegerType)))
   }
+
+  /** The per-shard manifest of a gzip JSONL shard dir, read back with
+    * [[JsonlShardSchema]] in FAILFAST mode: under the default PERMISSIVE
+    * mode a corrupt or mistyped line would silently null into the
+    * manifest. Spark parses only the fields an aggregate references (and
+    * turns a count of anything never null into `count(1)`), so `n_docs`
+    * counts `doc_id`: with it, `pos` and `text` referenced, a mistyped
+    * number or a cut-off line fails. `lang` is a string, which any JSON
+    * value parses as.
+    */
+  private[graft] def jsonlManifest(s: SparkSession, dir: String): DataFrame =
+    s.read.schema(JsonlShardSchema).option("mode", "FAILFAST").json(dir)
+      .groupBy(col("shard").cast("int").as("shard"))
+      .agg(count(col("doc_id")).as("n_docs"),
+        sum(size(split(col("text"), " ")).cast("long")).as("n_tokens"),
+        sum(length(col("text")).cast("long")).as("n_chars"),
+        max(col("pos")).as("max_pos"))
 
   /** Synthetic raw InterProScan matches carrying the FULL default-
     * shape location fields the lookup formatters select from
@@ -119,7 +137,7 @@ object SinkQueries {
     // write→read round trip, not just the plan.
     "sink_jsonl_shards" -> ((s, d) => {
       val docs = Tables.documents(s, d)
-      val outDir = StreamQueries.drainDir("graft-jsonl-shards-")
+      val outDir = Drain.drainDir("graft-jsonl-shards-")
       graft.ops.CorpusOps.shuffleShards(docs, "doc_id", JsonlShards)
         .select(col("doc_id"), col("shard"), col("pos"))
         .join(docs.select(col("doc_id"), col("text"), col("lang")),
@@ -138,21 +156,7 @@ object SinkQueries {
         .hint("rebalance", col("shard"))
         .write.mode("overwrite").partitionBy("shard")
         .option("compression", "gzip").json(s"$outDir/data")
-      // explicit read-back schema (§6): the written schema is known
-      // statically, so the data is read once, with no inference pass
-      // FAILFAST (advice r17): with an explicit schema under the
-      // default PERMISSIVE mode a corrupt or type-mismatched record
-      // would silently null into the manifest — the round trip this
-      // row exists to certify must fail loudly instead.
-      s.read.schema(JsonlShardSchema).option("mode", "FAILFAST")
-        .json(s"$outDir/data")
-        .groupBy(col("shard").cast("int").as("shard"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(size(split(col("text"), " ")).cast("long")).as("n_tokens"),
-          sum(length(col("text")).cast("long")).as("n_chars"),
-          max(col("pos")).as("max_pos"))
-        .select(col("shard"), col("n_docs"), col("n_tokens"),
-          col("n_chars"), col("max_pos"))
+      jsonlManifest(s, s"$outDir/data")
     }),
 
     // The Z-ORDER layout under the oracle gate (ZOrderSpec pins the
@@ -165,7 +169,7 @@ object SinkQueries {
     // oracle. Exact-decimal sum, the money discipline.
     "sink_zorder_scan" -> ((s, d) => {
       import org.apache.spark.sql.types.DecimalType
-      val dir = StreamQueries.drainDir("graft-zorder-") + "/cubes"
+      val dir = Drain.drainDir("graft-zorder-") + "/cubes"
       val li = Tables.lineitem(s, d).select(
         col("l_orderkey"), col("l_linenumber"),
         (col("l_partkey") % 1024).cast("long").as("px"),
@@ -192,7 +196,7 @@ object SinkQueries {
     // off the base table.
     "sink_compact_scan" -> ((s, d) => {
       import org.apache.spark.sql.types.DecimalType
-      val root = StreamQueries.drainDir("graft-compact-")
+      val root = Drain.drainDir("graft-compact-")
       val small = s"$root/small"; val out = s"$root/compacted"
       Tables.lineitem(s, d).filter(col("l_orderkey") % 4 === 0)
         .select(col("l_orderkey"), col("l_partkey"), col("l_quantity"))
@@ -222,7 +226,7 @@ object SinkQueries {
     // off the base table.
     "sink_zonemap_scan" -> ((s, d) => {
       import org.apache.spark.sql.types.DecimalType
-      val root = StreamQueries.drainDir("graft-zonemap-")
+      val root = Drain.drainDir("graft-zonemap-")
       val li = Tables.lineitem(s, d).select(
         col("l_orderkey"), (col("l_orderkey") % 4096).as("k"),
         col("l_quantity"))

@@ -1,17 +1,13 @@
 package graft.harness
 
-import graft.streaming.EventsStream
+import graft.streaming.{Drain, EventsStream}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types.DecimalType
 
 /** Structured Streaming surface (SURVEY.md §2.9). The reference is
   * batch-only (sentinel-file pipelines between export and index
-  * tasks); this is the Spark-native analogue: a file stream with
-  * watermarked tumbling-window aggregation run to completion with
-  * Trigger.AvailableNow — the pattern that replaces the reference's
-  * `.load`/`.done` handoff (interpro/elastic/export.py:44-67).
+  * tasks); this is the Spark-native analogue: file streams run to
+  * completion, each through [[graft.streaming.Drain]].
   */
 object StreamQueries {
   type Q = (SparkSession, String) => DataFrame
@@ -28,41 +24,6 @@ object StreamQueries {
   private val CusumDrift = 5000000L
   private val CusumThreshold = 200000000L
 
-  /** Dedicated child session for streaming drains: stateful operators
-    * create one state store per shuffle partition, and at drain scale 8
-    * stores beat 32 (measured ~2x on the dedup). `newSession()` scopes
-    * that setting to the drains — same SparkContext, shared cache,
-    * same extensions, but an isolated SQL conf — so a concurrent query
-    * on the parent session never observes a mutated
-    * `spark.sql.shuffle.partitions` (mutating the shared session conf
-    * was the anti-pattern previously fixed in Graphs.scala).
-    *
-    * ONE child session is shared by every drain under the same parent
-    * (guide §2.4 applied to session machinery — don't rebuild what you
-    * already have): each `newSession()` rebuilds a full SessionState
-    * (conf clone, catalog, analyzer/optimizer rule stacks, extension
-    * function registry) on first use, a fixed cost the 13 drains paid
-    * 13× per census for no isolation benefit — drains run sequentially,
-    * every memory-sink view name is distinct, and `drained` drops its
-    * view and resets the terminated-query list after each drain, so
-    * the shared session accumulates no state. Per-drain checkpoint and
-    * state-store dirs stay distinct (each drain makes its own
-    * drainDir / temp checkpoint), so results are unchanged.
-    */
-  private val childSessions =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, SparkSession]()
-  private def streamSession(s: SparkSession): SparkSession =
-    childSessions.computeIfAbsent(s, parent => {
-      val child = parent.newSession()
-      child.conf.set("spark.sql.shuffle.partitions", "8")
-      child
-    })
-
-  /** One persisted ANN index per (JVM, sf): the write-side build runs
-    * once and every stream_ann_search drain serves against it — the
-    * index lives on disk (drainDir cleans at JVM exit), so child
-    * sessions and repeated drains all reuse the same artifact.
-    */
   /** Schema for streaming query vectors off the staged embeddings
     * inbox (file streams need an explicit schema). */
   private val embStreamSchema = org.apache.spark.sql.types.StructType(Seq(
@@ -74,99 +35,45 @@ object StreamQueries {
     org.apache.spark.sql.types.StructField("label",
       org.apache.spark.sql.types.IntegerType)))
 
+  /** One persisted ANN index per (JVM, sf): the write-side build runs
+    * once and every stream_ann_search drain serves against it — the
+    * index lives on disk (drainDir cleans at JVM exit), so child
+    * sessions and repeated drains all reuse the same artifact.
+    */
   private val annIx =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[graft] def annIndexDir(s: SparkSession, d: String): String =
     annIx.computeIfAbsent(d, _ => {
-      val dir = drainDir("graft-annix-") + "/index"
+      val dir = Drain.drainDir("graft-annix-") + "/index"
       graft.sources.VectorIndex.build(graft.Tables.embeddings(s, d),
         "vec_id", "embedding", nCells = 8, outDir = dir)
       dir
     })
 
-  /** Hand the drained memory-sink table back to the PARENT session and
-    * drop the child's temp view: the sink's rows are already
-    * driver-resident, so this copies once and then frees the sink —
-    * without it every drain in a long-lived JVM leaks a full table
-    * copy inside its discarded child session.
-    */
-  private[graft] def drained(parent: SparkSession, sess: SparkSession,
-                      name: String): DataFrame = {
-    val t = sess.table(name)
-    val out = parent.createDataFrame(
-      java.util.Arrays.asList(t.collect(): _*), t.schema)
-    sess.catalog.dropTempView(name)
-    // forget the terminated query: the manager's terminated-query list
-    // pins the MemorySink (a full driver-side copy of the result) for
-    // the child session's lifetime — across a 150-query bench those
-    // copies accumulate as pure GC pressure
-    sess.streams.resetTerminated()
-    out
-  }
-
-  /** Temp directory for a parquet-sink drain (result data +
-    * checkpoint), deleted recursively on JVM exit: the file-sink path
-    * exists precisely because drain results can be large, so leaving
-    * every invocation's full output in /tmp would fill the disk
-    * across repeated bench/verify runs (the memory sink left nothing
-    * behind; this keeps that property).
-    */
-  // one shutdown hook draining a shared queue — registering a hook per
-  // drainDir call would accumulate unbounded hook threads in a
-  // long-lived session (WarmBench loops the same streaming query N
-  // times; bench+verify reruns), each pinning its temp path
-  private val drainDirs =
-    new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      var p = drainDirs.poll()
-      while (p != null) { rm(p.toFile); p = drainDirs.poll() }
-    }))
-  }
-
-  private[harness] def drainDir(prefix: String): String = {
-    val dir = java.nio.file.Files.createTempDirectory(prefix)
-    drainDirs.add(dir)
-    dir.toString
-  }
-
   val queries: Map[String, Q] = Map(
     // Watermark + 1h tumbling window over the events file stream,
-    // drained via AvailableNow into a memory sink. The value sum runs
+    // drained into a memory sink. The value sum runs
     // in exact decimal (double sum order is nondeterministic across
     // partitions) and renders as double, matching the oracle.
     "stream_window_counts" -> ((s, d) => {
-      val name = "stream_window_counts_mem"
-      val sess = streamSession(s)
       val agg = EventsStream
-        .windowedCounts(EventsStream.readStream(sess, d))
+        .windowedCounts(EventsStream.readStream(Drain.streamSession(s), d))
         .select(
           date_format(col("w_start"), "yyyy-MM-dd HH:mm:ss").as("w_start"),
           col("event_type"), col("n"), col("total_value"))
-      val q = agg.writeStream.format("memory").queryName(name)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      drained(s, sess, name)
+      Drain.memory(s, "stream_window_counts", agg, "complete")
     }),
 
     // Streaming dedup: dropDuplicates keyed on event_id with a
     // watermark bounding the dedup state — the streaming form of
     // exact dedup (state evicts beyond the watermark horizon).
     "stream_dedup" -> ((s, d) => {
-      val name = "stream_dedup_mem"
-      val sess = streamSession(s)
-      val agg = EventsStream.readStream(sess, d)
+      val agg = EventsStream.readStream(Drain.streamSession(s), d)
         .withWatermark("ts", "2 hours")
         .dropDuplicates("event_id")
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_unique"))
-      val q = agg.writeStream.format("memory").queryName(name)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      drained(s, sess, name)
+      Drain.memory(s, "stream_dedup", agg, "complete")
     }),
 
     // Within-watermark streaming dedup: dropDuplicatesWithinWatermark
@@ -186,18 +93,13 @@ object StreamQueries {
     // production deployment tunes the delay to its dedup horizon and
     // accepts re-counts past it (that IS the primitive's contract).
     "stream_dropdup_watermark" -> ((s, d) => {
-      val name = "stream_dropdup_wm_mem"
-      val sess = streamSession(s)
-      val agg = EventsStream.readStream(sess, d)
+      val agg = EventsStream.readStream(Drain.streamSession(s), d)
         .withColumn("dup_key", pmod(col("event_id"), lit(1000L)))
         .withWatermark("ts", "45 days")
         .dropDuplicatesWithinWatermark("event_type", "dup_key")
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_keys"))
-      val q = agg.writeStream.format("memory").queryName(name)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      drained(s, sess, name)
+      Drain.memory(s, "stream_dropdup_watermark", agg, "complete")
     }),
 
     // Stream-stream interval join: click->purchase attribution per
@@ -207,7 +109,7 @@ object StreamQueries {
     // + watermarks, stream-stream join state grows forever; this is
     // the only formulation that survives an unbounded stream).
     "stream_join" -> ((s, d) => {
-      val sess = streamSession(s)
+      val sess = Drain.streamSession(s)
       // BANDED stream-stream interval join: the state store keys on
       // the EQUALITY columns only, so joining on user_id alone
       // buffers a hot user's whole history under one state key and
@@ -249,25 +151,17 @@ object StreamQueries {
       // of rows (the sf1z zipf check tripped a 300 MB driver task on
       // the memory sink's collect+re-parallelize handoff), and the
       // file sink keeps result rows executor→storage
-      val outDir = drainDir("graft-streamjoin-drain-")
-      val q = joined
+      Drain.parquet(s, "stream_join", joined
         .select(col("click_id"), col("purchase_id"),
           col("c_user").as("user_id"),
           date_format(col("c_ts"), "yyyy-MM-dd HH:mm:ss").as("click_ts"),
-          date_format(col("p_ts"), "yyyy-MM-dd HH:mm:ss").as("purchase_ts"))
-        .writeStream.format("parquet")
-        .option("path", s"$outDir/data")
-        .option("checkpointLocation", s"$outDir/ckpt")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      sess.streams.resetTerminated()
-      s.read.parquet(s"$outDir/data")
+          date_format(col("p_ts"), "yyyy-MM-dd HH:mm:ss").as("purchase_ts")))
     }),
 
     // Streaming NEAR-dedup (graft.streaming.NearDedup): per-row HOF
     // MinHash signatures, LSH band keys exploded, then a stateful
     // first-seen-wins per-bucket pass — one shuffle, one long of state
-    // per bucket. The AvailableNow drain delivers one batch, which is
+    // per bucket. The drain delivers one batch, which is
     // why the DuckDB oracle (global per-bucket MIN) matches exactly;
     // NearDedupReplaySpec pins the multi-batch semantics (cross-batch
     // first-seen-wins, TTL-bounded state). Drained through a PARQUET
@@ -275,21 +169,14 @@ object StreamQueries {
     // large, and the file-sink path keeps result rows executor→storage
     // without ever passing through driver memory.
     "stream_near_dedup" -> ((s, d) => {
-      val sess = streamSession(s)
+      val sess = Drain.streamSession(s)
       import sess.implicits._
       val bands = graft.streaming.NearDedup.bandKeys(
         graft.streaming.DocsStream.readStream(sess, d),
         NearN, NearK, NearBands)
       val pairs = graft.streaming.NearDedup.flagPairs(bands.as[(Long, Long)])
-      val outDir = drainDir("graft-near-dedup-drain-")
-      val q = pairs.writeStream.format("parquet")
-        .option("path", s"$outDir/data")
-        .option("checkpointLocation", s"$outDir/ckpt")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      sess.streams.resetTerminated()
       // a doc collides with the same representative in several bands
-      s.read.parquet(s"$outDir/data").distinct()
+      Drain.parquet(s, "stream_near_dedup", pairs).distinct()
     }),
 
     // Streaming windowed top-k (graft.streaming.StreamTopK): one
@@ -304,8 +191,7 @@ object StreamQueries {
     // the true counts (and err = 0).
     "stream_topk" -> ((s, d) => {
       import org.apache.spark.sql.expressions.Window
-      val name = "stream_topk_mem"
-      val sess = streamSession(s)
+      val sess = Drain.streamSession(s)
       import sess.implicits._
       val events = EventsStream.readStream(sess, d)
         .select(unix_micros(date_trunc("hour", col("ts"))).as("window_us"),
@@ -313,10 +199,7 @@ object StreamQueries {
         .as[graft.streaming.StreamTopK.KeyedEvent]
       val topk = graft.streaming.StreamTopK
         .topkStream(events, capacity = 4096, topN = 5)
-      val q = topk.toDF().writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      drained(s, sess, name)
+      Drain.memory(s, "stream_topk", topk.toDF(), "append")
         .withColumn("mx", max(col("n_processed")).over(
           Window.partitionBy(col("window_us"))))
         .filter(col("n_processed") === col("mx"))
@@ -340,8 +223,7 @@ object StreamQueries {
     // and the soak.
     "stream_topk_ttl" -> ((s, d) => {
       import org.apache.spark.sql.expressions.Window
-      val name = "stream_topk_ttl_mem"
-      val sess = streamSession(s)
+      val sess = Drain.streamSession(s)
       import sess.implicits._
       val events = EventsStream.readStream(sess, d)
         .select(unix_micros(date_trunc("hour", col("ts"))).as("window_us"),
@@ -352,10 +234,7 @@ object StreamQueries {
       val topk = graft.streaming.StreamTopK.topkStreamTtl(events,
         capacity = 4096, topN = 5,
         ttl = scala.concurrent.duration.Duration(90, "days"))
-      val q = topk.toDF().writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      drained(s, sess, name)
+      Drain.memory(s, "stream_topk_ttl", topk.toDF(), "append")
         .withColumn("mx", max(col("n_processed")).over(
           Window.partitionBy(col("window_us"))))
         .filter(col("n_processed") === col("mx"))
@@ -375,8 +254,7 @@ object StreamQueries {
     // batch funnel; FunnelReplaySpec pins split-independence.
     "stream_funnel" -> ((s, d) => {
       import org.apache.spark.sql.expressions.Window
-      val name = "stream_funnel_mem"
-      val sess = streamSession(s)
+      val sess = Drain.streamSession(s)
       import sess.implicits._
       val dayUs = 86400000000L
       val events = EventsStream.readStream(sess, d)
@@ -384,10 +262,7 @@ object StreamQueries {
           unix_micros(col("ts")).as("us"))
         .as[graft.streaming.Funnel.FunnelEvent]
       val funnel = graft.streaming.Funnel.funnelStream(events, dayUs)
-      val q = funnel.toDF().writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      drained(s, sess, name)
+      Drain.memory(s, "stream_funnel", funnel.toDF(), "append")
         .withColumn("mx", max(col("n_processed")).over(
           Window.partitionBy(col("user_id"))))
         .filter(col("n_processed") === col("mx"))
@@ -412,17 +287,13 @@ object StreamQueries {
     // window_retention SQL.
     "stream_retention" -> ((s, d) => {
       import org.apache.spark.sql.expressions.Window
-      val name = "stream_retention_mem"
-      val sess = streamSession(s)
+      val sess = Drain.streamSession(s)
       import sess.implicits._
       val events = EventsStream.readStream(sess, d)
         .select(col("user_id"), unix_date(to_date(col("ts"))).as("epoch_day"))
         .as[graft.streaming.Retention.DayEvent]
       val ret = graft.streaming.Retention.retentionStream(events)
-      val q = ret.toDF().writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      drained(s, sess, name)
+      Drain.memory(s, "stream_retention", ret.toDF(), "append")
         .withColumn("mx", max(col("n_processed")).over(
           Window.partitionBy(col("user_id"))))
         .filter(col("n_processed") === col("mx"))
@@ -444,8 +315,7 @@ object StreamQueries {
     // S_t = P_t − min(0, running_min(P)) and aggregates per user.
     "stream_cusum" -> ((s, d) => {
       import org.apache.spark.sql.expressions.Window
-      val name = "stream_cusum_mem"
-      val sess = streamSession(s)
+      val sess = Drain.streamSession(s)
       import sess.implicits._
       val events = EventsStream.readStream(sess, d)
         .select(col("user_id"), col("event_id"),
@@ -454,10 +324,7 @@ object StreamQueries {
         .as[graft.streaming.Cusum.CusumEvent]
       val out = graft.streaming.Cusum.cusumStream(events,
         CusumTarget, CusumDrift, CusumThreshold)
-      val q = out.toDF().writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      drained(s, sess, name)
+      Drain.memory(s, "stream_cusum", out.toDF(), "append")
         .withColumn("mx", max(col("n_processed")).over(
           Window.partitionBy(col("user_id"))))
         .filter(col("n_processed") === col("mx"))
@@ -476,8 +343,7 @@ object StreamQueries {
     // commutative, idempotent), re-emitted whole each batch.
     "stream_cdc_apply" -> ((s, d) => {
       import org.apache.spark.sql.expressions.Window
-      val name = "stream_cdc_apply_mem"
-      val sess = streamSession(s)
+      val sess = Drain.streamSession(s)
       import sess.implicits._
       val ops = EventsStream.readStream(sess, d)
         .select(col("user_id"), unix_micros(col("ts")).as("us"),
@@ -485,10 +351,7 @@ object StreamQueries {
           (col("event_type") === "error").as("delete"))
         .as[graft.streaming.CdcApply.CdcOp]
       val applied = graft.streaming.CdcApply.applyStream(ops)
-      val q = applied.toDF().writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      drained(s, sess, name)
+      Drain.memory(s, "stream_cdc_apply", applied.toDF(), "append")
         .withColumn("mx", max(col("n_processed")).over(
           Window.partitionBy(col("user_id"))))
         .filter(col("n_processed") === col("mx"))
@@ -510,29 +373,17 @@ object StreamQueries {
     // (write-side), queries stream against it (read-side,
     // partition-pruned probes only).
     "stream_ann_search" -> ((s, d) => {
-      val sess = streamSession(s)
       // the persisted index builds ONCE per (JVM, sf) — that is the
       // serving contract (write-side build, read-side streams), and
       // the bench charges the build to the named warm_stream_frames
       // preamble row instead of whichever drain runs first
       val ixDir = annIndexDir(s, d)
-      val outDir = drainDir("graft-annix-drain-")
-      val qs = sess.readStream.schema(embStreamSchema)
+      val qs = Drain.streamSession(s).readStream.schema(embStreamSchema)
         .parquet(graft.streaming.FileInbox.stage(d, "embeddings"))
         .filter(col("vec_id") < 50)
-      val q = qs.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          if (!batch.isEmpty)
-            graft.sources.VectorIndex.search(batch.sparkSession, ixDir,
-                batch, "vec_id", "embedding", nprobe = 2, k = 5)
-              .write.mode("append").parquet(s"$outDir/data")
-          ()
-        }
-        .option("checkpointLocation", s"$outDir/ckpt")
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      sess.streams.resetTerminated()
-      s.read.parquet(s"$outDir/data")
+      Drain.foreachBatch(s, "stream_ann_search", qs)(batch =>
+        graft.sources.VectorIndex.search(batch.sparkSession, ixDir,
+          batch, "vec_id", "embedding", nprobe = 2, k = 5))
     }),
 
     // Streaming serving END-TO-END: query vectors stream in and each
@@ -546,34 +397,22 @@ object StreamQueries {
     // states. RetrievalPipeline runs the same stage on its own
     // artifact and gauges recall.
     "stream_ann_rerank" -> ((s, d) => {
-      val sess = streamSession(s)
       val ixDir = annIndexDir(s, d)
-      val outDir = drainDir("graft-annrr-drain-")
-      val qs = sess.readStream.schema(embStreamSchema)
+      val qs = Drain.streamSession(s).readStream.schema(embStreamSchema)
         .parquet(graft.streaming.FileInbox.stage(d, "embeddings"))
         .filter(col("vec_id") < 50)
-      val q = qs.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          if (!batch.isEmpty)
-            graft.sources.VectorIndex.searchRerank(batch.sparkSession, ixDir,
-                batch, "vec_id", "embedding",
-                graft.Tables.embeddings(batch.sparkSession, d),
-                nprobe = 2, shortK = 25, k = 5)
-              .write.mode("append").parquet(s"$outDir/data")
-          ()
-        }
-        .option("checkpointLocation", s"$outDir/ckpt")
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      sess.streams.resetTerminated()
-      s.read.parquet(s"$outDir/data")
+      Drain.foreachBatch(s, "stream_ann_rerank", qs)(batch =>
+        graft.sources.VectorIndex.searchRerank(batch.sparkSession, ixDir,
+          batch, "vec_id", "embedding",
+          graft.Tables.embeddings(batch.sparkSession, d),
+          nprobe = 2, shortK = 25, k = 5))
     }),
 
     // Custom stateful streaming: gap sessionization per user via
-    // flatMapGroupsWithState over the events file stream, drained with
-    // AvailableNow (30-minute gap; timestamps as exact micros).
+    // flatMapGroupsWithState over the events file stream, drained to
+    // completion (30-minute gap; timestamps as exact micros).
     "stream_sessionize" -> ((s, d) => {
-      val sess = streamSession(s)
+      val sess = Drain.streamSession(s)
       import sess.implicits._
       val events = EventsStream.readStream(sess, d)
         .select(col("user_id"), unix_micros(col("ts")).as("ts_us"))
@@ -583,20 +422,13 @@ object StreamQueries {
       // near-1:1 with events on a sparse stream (2.86M rows at sf3),
       // and the file sink keeps them executor->storage instead of
       // collect()ing the whole result through driver memory twice
-      val outDir = drainDir("graft-sessionize-drain-")
-      val q = sessions.toDF().writeStream.format("parquet")
-        .option("path", s"$outDir/data")
-        .option("checkpointLocation", s"$outDir/ckpt")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      sess.streams.resetTerminated()
       // supersession dedup: each batch re-emits the still-open session
       // (same user+start, end/n grown monotonically), so a multi-batch
       // drain's sink holds provisional prefixes of the final row. Keep
       // the max per (user, start) — a no-op for a single batch (one
       // user's sessions never share a start), exact for in-order
       // batches (SessionizeReplaySpec pins it).
-      s.read.parquet(s"$outDir/data")
+      Drain.parquet(s, "stream_sessionize", sessions.toDF())
         .groupBy(col("user_id"), col("start_us"))
         .agg(max(col("end_us")).as("end_us"),
           max(col("n_events")).as("n_events"))

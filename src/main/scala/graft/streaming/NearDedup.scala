@@ -22,7 +22,7 @@ import scala.concurrent.duration.FiniteDuration
   *
   * State is one long per observed band bucket — unbounded over an
   * infinite stream under [[flagPairs]], which is fine for a bounded
-  * AvailableNow drain but not for a deployment. [[flagPairsTtl]] is
+  * run-to-completion [[Drain]] but not for a deployment. [[flagPairsTtl]] is
   * the bounded-state variant: buckets idle longer than the TTL in
   * EVENT time are evicted and the next arrival re-seeds them — the
   * deliberate trade of every TTL'd dedup index (the reference's
@@ -34,7 +34,7 @@ import scala.concurrent.duration.FiniteDuration
   * by stream time means a backfill/reprocess at full speed does not
   * mass-evict state that was live in the original timeline; (b)
   * ProcessingTimeTimeout makes the stateful operator report
-  * "may need another batch" on EVERY batch, so a Trigger.AvailableNow
+  * "may need another batch" on EVERY batch, so a run-to-completion
   * drain never terminates — measured as an infinite empty-batch loop,
   * 2700+ micro-batches before the kill.
   */

@@ -1,8 +1,7 @@
 package graft
 
-import graft.streaming.CdcApply
+import graft.streaming.{CdcApply, Drain}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 /** Multi-batch semantics of the streaming CDC apply: the winning op
@@ -39,12 +38,8 @@ class CdcApplyReplaySpec extends SparkSpec {
     import sess.implicits._
     val ops = sess.readStream.schema(schema).parquet(inbox)
       .as[CdcApply.CdcOp]
-    val q = CdcApply.applyStream(ops).toDF()
-      .writeStream.format("parquet")
-      .option("path", out).option("checkpointLocation", ckpt)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.read.parquet(out)
+    Drain.parquet(spark, "cdc_apply_replay", CdcApply.applyStream(ops).toDF(),
+        out, ckpt)
       .withColumn("mx", max(col("n_processed"))
         .over(org.apache.spark.sql.expressions.Window
           .partitionBy(col("user_id"))))

@@ -1,8 +1,8 @@
 package graft
 
-import graft.streaming.{CdcApply, Funnel, NearDedup, Retention, Sessionize, StreamTopK}
+import graft.streaming.{CdcApply, Drain, Funnel, NearDedup, Retention, Sessionize, StreamTopK}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
+import org.apache.spark.sql.streaming.StreamingQueryException
 import org.apache.spark.sql.types._
 
 import scala.concurrent.duration._
@@ -86,14 +86,10 @@ class ChaosReplaySpec extends SparkSpec {
       : Map[(Long, Int), (String, Long)] = {
     val sess = drainSession()
     import sess.implicits._
-    val q = StreamTopK.topkStream(
+    val stream = StreamTopK.topkStream(
         sess.readStream.schema(topkSchema).parquet(inbox)
           .as[StreamTopK.KeyedEvent], capacity = 64, topN = 2)
-      .writeStream.format("parquet")
-      .option("path", out).option("checkpointLocation", ckpt)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val rows = spark.read.parquet(out).collect()
+    val rows = Drain.parquet(spark, "chaos_topk", stream.toDF(), out, ckpt).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getString(2), r.getLong(3),
         r.getLong(5)))
     val latest = rows.groupBy(_._1).view.mapValues(_.map(_._5).max).toMap
@@ -167,13 +163,10 @@ class ChaosReplaySpec extends SparkSpec {
       : Map[Long, (Long, Long, Double, Boolean)] = {
     val sess = drainSession()
     import sess.implicits._
-    val q = CdcApply.applyStream(
+    val stream = CdcApply.applyStream(
         sess.readStream.schema(cdcSchema).parquet(inbox).as[CdcApply.CdcOp])
-      .toDF().writeStream.format("parquet")
-      .option("path", out).option("checkpointLocation", ckpt)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.read.parquet(out)
+      .toDF()
+    Drain.parquet(spark, "chaos_cdc_apply", stream, out, ckpt)
       .withColumn("mx", max(col("n_processed"))
         .over(org.apache.spark.sql.expressions.Window
           .partitionBy(col("user_id"))))
@@ -221,14 +214,11 @@ class ChaosReplaySpec extends SparkSpec {
       : Map[Long, (Long, Option[Long], Option[Long])] = {
     val sess = drainSession()
     import sess.implicits._
-    val q = Funnel.funnelStream(
+    val stream = Funnel.funnelStream(
         sess.readStream.schema(funnelSchema).parquet(inbox)
           .as[Funnel.FunnelEvent], W)
-      .toDF().writeStream.format("parquet")
-      .option("path", out).option("checkpointLocation", ckpt)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.read.parquet(out)
+      .toDF()
+    Drain.parquet(spark, "chaos_funnel", stream, out, ckpt)
       .withColumn("mx", max(col("n_processed"))
         .over(org.apache.spark.sql.expressions.Window
           .partitionBy(col("user_id"))))
@@ -332,15 +322,11 @@ class ChaosReplaySpec extends SparkSpec {
       NearDedup.bandKeys(docs.withWatermark("ts", "0 seconds"),
         n = 3, k = 16, bands = 8, extraCols = Seq("ts"))
         .as[NearDedup.BandHit], 2.minutes)
-    val q = pairs.writeStream.format("parquet")
-      .option("path", out).option("checkpointLocation", ckpt)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
     // NO distinct(): a pair flags once per shared LSH band (identical
     // texts share all 8), so the multiset is exactly 8 copies of each
     // pair — any OTHER multiplicity means the damaged-restart dedupe
     // failed (a re-executed batch re-appending would double it)
-    spark.read.parquet(out).collect()
+    Drain.parquet(spark, "chaos_near_dedup", pairs, out, ckpt).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
   }
 
@@ -378,14 +364,11 @@ class ChaosReplaySpec extends SparkSpec {
       : Set[(Long, Long, Long, Long)] = {
     val sess = drainSession()
     import sess.implicits._
-    val q = Sessionize.sessionize(
+    val stream = Sessionize.sessionize(
         sess.readStream.schema(sessSchema).parquet(inbox)
           .as[Sessionize.SessionEvent], gapMinutes = 30)
-      .toDF().writeStream.format("parquet")
-      .option("path", out).option("checkpointLocation", ckpt)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.read.parquet(out)
+      .toDF()
+    Drain.parquet(spark, "chaos_sessionize", stream, out, ckpt)
       .groupBy(col("user_id"), col("start_us"))
       .agg(max(col("end_us")).as("end_us"), max(col("n_events")).as("n"))
       .collect()
@@ -430,14 +413,11 @@ class ChaosReplaySpec extends SparkSpec {
       : Map[Long, (Int, Seq[Int])] = {
     val sess = drainSession()
     import sess.implicits._
-    val q = Retention.retentionStream(
+    val stream = Retention.retentionStream(
         sess.readStream.schema(retSchema).parquet(inbox)
           .as[Retention.DayEvent])
-      .toDF().writeStream.format("parquet")
-      .option("path", out).option("checkpointLocation", ckpt)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.read.parquet(out)
+      .toDF()
+    Drain.parquet(spark, "chaos_retention", stream, out, ckpt)
       .withColumn("mx", max(col("n_processed"))
         .over(org.apache.spark.sql.expressions.Window
           .partitionBy(col("user_id"))))

@@ -105,10 +105,16 @@ class CorpusPipelineSpec extends SparkSpec {
     for (bad <- Seq("{\"doc_id\":2,\"pos\":2,\"text\":\"cut off",
                     "{\"doc_id\":\"three\",\"pos\":3,\"text\":\"t\",\"lang\":\"en\"}",
                     "{\"doc_id\":4,\"pos\":4.5,\"text\":\"t\",\"lang\":\"en\"}")) {
-      val e = intercept[Exception](CorpusPipeline.jsonlRows(spark, withLine(bad)))
-      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-        .exists(t => String.valueOf(t.getMessage).contains("FAILFAST")),
-        s"not a FAILFAST parse error for $bad: $e")
+      val dir = withLine(bad)
+      // both readers of a shard dir: the corpus stage count and the
+      // sink_jsonl_shards manifest
+      for (read <- Seq[() => Any](() => CorpusPipeline.jsonlRows(spark, dir),
+          () => harness.SinkQueries.jsonlManifest(spark, dir).collect())) {
+        val e = intercept[Exception](read())
+        assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+          .exists(t => String.valueOf(t.getMessage).contains("FAILFAST")),
+          s"not a FAILFAST parse error for $bad: $e")
+      }
     }
   }
 }

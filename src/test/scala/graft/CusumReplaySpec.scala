@@ -1,8 +1,7 @@
 package graft
 
-import graft.streaming.Cusum
+import graft.streaming.{Cusum, Drain}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 /** Multi-batch semantics of the streaming CUSUM: folding the same
@@ -67,12 +66,8 @@ class CusumReplaySpec extends SparkSpec {
     import sess.implicits._
     val events = sess.readStream.schema(schema).parquet(inbox)
       .as[Cusum.CusumEvent]
-    val q = Cusum.cusumStream(events, Target, Drift, H).toDF()
-      .writeStream.format("parquet")
-      .option("path", out).option("checkpointLocation", ckpt)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.read.parquet(out)
+    Drain.parquet(spark, "cusum_replay",
+        Cusum.cusumStream(events, Target, Drift, H).toDF(), out, ckpt)
       .withColumn("mx", max(col("n_processed"))
         .over(org.apache.spark.sql.expressions.Window
           .partitionBy(col("user_id"))))

@@ -1,8 +1,7 @@
 package graft
 
-import graft.streaming.Funnel
+import graft.streaming.{Drain, Funnel}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 /** Multi-batch semantics of the streaming funnel: the state's
@@ -39,12 +38,8 @@ class FunnelReplaySpec extends SparkSpec {
     import sess.implicits._
     val events = sess.readStream.schema(schema).parquet(inbox)
       .as[Funnel.FunnelEvent]
-    val q = Funnel.funnelStream(events, W).toDF()
-      .writeStream.format("parquet")
-      .option("path", out).option("checkpointLocation", ckpt)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val rows = spark.read.parquet(out)
+    val rows = Drain.parquet(spark, "funnel_replay",
+        Funnel.funnelStream(events, W).toDF(), out, ckpt)
       .withColumn("mx", max(col("n_processed"))
         .over(org.apache.spark.sql.expressions.Window
           .partitionBy(col("user_id"))))

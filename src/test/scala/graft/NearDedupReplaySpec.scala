@@ -1,7 +1,6 @@
 package graft
 
-import graft.streaming.NearDedup
-import org.apache.spark.sql.streaming.Trigger
+import graft.streaming.{Drain, NearDedup}
 import org.apache.spark.sql.types._
 
 import scala.concurrent.duration._
@@ -70,11 +69,7 @@ class NearDedupReplaySpec extends SparkSpec {
           NearDedup.bandKeys(docs.withWatermark("ts", "0 seconds"),
             N, K, BANDS, extraCols = Seq("ts")).as[NearDedup.BandHit], t)
     }
-    val q = pairs.writeStream.format("parquet")
-      .option("path", out).option("checkpointLocation", ckpt)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.read.parquet(out).distinct().collect()
+    Drain.parquet(spark, "near_dedup_replay", pairs, out, ckpt).distinct().collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
   }
 

@@ -1,8 +1,7 @@
 package graft
 
-import graft.streaming.Sessionize
+import graft.streaming.{Drain, Sessionize}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 /** Multi-batch semantics of the streaming gap sessionization: the
@@ -40,12 +39,8 @@ class SessionizeReplaySpec extends SparkSpec {
     import sess.implicits._
     val events = sess.readStream.schema(schema).parquet(inbox)
       .as[Sessionize.SessionEvent]
-    val q = Sessionize.sessionize(events, gapMinutes).toDF()
-      .writeStream.format("parquet")
-      .option("path", out).option("checkpointLocation", ckpt)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.read.parquet(out)
+    Drain.parquet(spark, "sessionize_replay",
+        Sessionize.sessionize(events, gapMinutes).toDF(), out, ckpt)
       .groupBy(col("user_id"), col("start_us"))
       .agg(max(col("end_us")).as("end_us"), max(col("n_events")).as("n"))
       .collect()

@@ -1,6 +1,7 @@
 package graft
 
 import graft.harness.StreamQueries
+import graft.streaming.Drain
 
 /** Streaming drains must not leak configuration into the shared
   * session: each drain runs on its own `newSession()` child with a
@@ -48,7 +49,7 @@ class StreamIsolationSpec extends SparkSpec {
     child.createDataFrame(Seq(("a", 1L), ("b", 2L)))
       .toDF("k", "n").createOrReplaceTempView("child_sink")
     assert(child.catalog.tableExists("child_sink"))
-    val copied = StreamQueries.drained(spark, child, "child_sink")
+    val copied = Drain.drained(spark, child, "child_sink")
     assert(copied.sparkSession eq spark)
     assert(copied.count() === 2)
     assert(!child.catalog.tableExists("child_sink"),

@@ -1,7 +1,6 @@
 package graft
 
-import graft.streaming.StreamTopK
-import org.apache.spark.sql.streaming.Trigger
+import graft.streaming.{Drain, StreamTopK}
 import org.apache.spark.sql.types._
 
 /** Multi-batch semantics of the streaming SpaceSaving top-k
@@ -40,12 +39,8 @@ class StreamTopKSpec extends SparkSpec {
     import sess.implicits._
     val events = sess.readStream.schema(schema).parquet(inbox)
       .as[StreamTopK.KeyedEvent]
-    val q = StreamTopK.topkStream(events, capacity, topN)
-      .writeStream.format("parquet")
-      .option("path", out).option("checkpointLocation", ckpt)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val rows = spark.read.parquet(out).collect()
+    val rows = Drain.parquet(spark, "topk_replay",
+        StreamTopK.topkStream(events, capacity, topN).toDF(), out, ckpt).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getString(2), r.getLong(3),
         r.getLong(5)))
     val latest = rows.groupBy(_._1).view.mapValues(_.map(_._5).max).toMap
@@ -130,14 +125,11 @@ class StreamTopKSpec extends SparkSpec {
       import sess.implicits._
       val events = sess.readStream.schema(ttlSchema).parquet(inbox.toString)
         .withWatermark("ts", "0 seconds").as[StreamTopK.TimedEvent]
-      val q = StreamTopK
+      val stream = StreamTopK
         .topkStreamTtl(events, capacity = 16, topN = 3,
           ttl = scala.concurrent.duration.Duration(1, "hour"))
-        .writeStream.format("parquet")
-        .option("path", out).option("checkpointLocation", ckpt)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val rows = spark.read.parquet(out).collect()
+      val rows = Drain.parquet(spark, "topk_ttl_replay", stream.toDF(), out, ckpt)
+        .collect()
         .map(r => (r.getLong(0), r.getInt(1), r.getString(2), r.getLong(3),
           r.getLong(5)))
       val latest = rows.groupBy(_._1).view.mapValues(_.map(_._5).max).toMap
