@@ -94,7 +94,7 @@ object ReleasePipeline {
       stage("es_docs")(
         Sinks.writeJsonDocsWithSentinel(
           SinkQueries.queries("fanout_docs")(spark, sfDir), s"$outDir/es_docs"))(
-        spark.read.text(s"$outDir/es_docs/part-*").count()))
+        spark.read.text(s"$outDir/es_docs").count()))
 
     Chains.run(spark, stages)
     stages.map(st => st.name -> counts(st.name))

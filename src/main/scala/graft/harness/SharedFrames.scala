@@ -13,8 +13,9 @@ import scala.util.{Failure, Success, Try}
   * sets, the taxonomy lineage closure) would otherwise be recomputed
   * by every query in their family. The cache is keyed by (session, sf
   * dir, frame name); entries of stopped sessions are evicted on
-  * access. MEMORY_AND_DISK so eviction degrades to recompute-from-disk
-  * rather than OOM at larger corpora.
+  * access. MEMORY_AND_DISK so eviction degrades to a read from disk
+  * rather than OOM at larger corpora. A cached frame holds its rows,
+  * not its build plan (see [[Slot]]).
   */
 object SharedFrames {
   private val frameCache =
@@ -43,18 +44,26 @@ object SharedFrames {
     * A failed build fails every caller that waited on it, with an
     * error naming the frame; [[cachedFrame]] then drops the slot, so a
     * later call builds afresh.
+    *
+    * A cached frame keeps its data only, never the computation that
+    * produced it: the build is checkpointed (lazily) and the checkpoint
+    * persisted, so the one count both materializes the frame and cuts
+    * its lineage. Its blocks then sit over a leaf scan, the build plan
+    * with its broadcast relations and shuffles becomes unreachable for
+    * the context cleaner to free, and every consumer (a frame built on
+    * this one included) plans over a one-node frame.
     */
   private final class Slot(key: String, build: () => DataFrame) {
     @volatile private var built = false
-    // materialize EAGERLY and fully: several builders (lineage
-    // closure, connected components) are backed by localCheckpointed
-    // loop RDDs that Bench sweeps between queries — a lazily-persisted
-    // frame whose first consumer fails mid-materialization, or whose
-    // partitions later need recompute, would chase destroyed
-    // checkpoint blocks. After count() every partition is
-    // memory/disk-backed and the truncated lineage is never re-walked.
+    // materialize EAGERLY and fully, into the persisted copy: the
+    // checkpoint's own blocks are localCheckpointed, and Bench sweeps
+    // those between queries, as it does the loop RDDs of builders
+    // such as the lineage closure. After count() every partition of
+    // the persisted copy is memory/disk-backed, so it is never
+    // recomputed and never chases a swept checkpoint block.
     lazy val result: Try[DataFrame] = Try {
-      val df = build().persist(StorageLevel.MEMORY_AND_DISK)
+      val df = graft.ops.Loops.materialize(build(), eager = false)
+        .persist(StorageLevel.MEMORY_AND_DISK)
       df.count()
       built = true
       df

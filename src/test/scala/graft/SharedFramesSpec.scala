@@ -1,14 +1,17 @@
 package graft
 
 import graft.harness.SharedFrames
+import org.apache.spark.rdd.GraftRddBridge
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Generate, Join, Window}
 
 /** Shared frames change where a family's work runs, never what its
   * queries return. Per family with a frame preamble: the preamble
   * builds exactly its declared key set, every query run cold (cache
   * released just before it) builds no key outside that set, and every
   * query that reads a shared frame returns the same rows warm (after
-  * the preamble) as cold.
+  * the preamble and Bench's between-row sweep) as cold. A cached frame
+  * keeps its data only: its plan holds none of its build's operators.
   */
 class SharedFramesSpec extends SparkSpec {
 
@@ -43,6 +46,15 @@ class SharedFramesSpec extends SparkSpec {
     case v => String.valueOf(v)
   }.mkString("|")
 
+  /** Bench's and WarmBench's between-row sweep, blocking: drops every
+    * locally checkpointed RDD's blocks, so a frame that still needed
+    * them fails its next read.
+    */
+  private def sweepLocalCheckpoints(): Unit =
+    spark.sparkContext.getPersistentRDDs.values
+      .filter(GraftRddBridge.isLocallyCheckpointed)
+      .foreach(_.unpersist(blocking = true))
+
   for ((family, keys) <- preambleKeys.toSeq.sortBy(_._1))
     test(s"$family: the preamble's frames, and the same rows warm and cold") {
       val queries = SparkEntry.modules.find(_._1 == family).get._2.toSeq.sortBy(_._1)
@@ -65,9 +77,24 @@ class SharedFramesSpec extends SparkSpec {
 
         SharedFrames.release(spark)
         SparkEntry.preambles(family)(spark, sf)
+        sweepLocalCheckpoints()
         readers.foreach { case (name, out, _) =>
           assert(rows(SparkEntry.queries(name)) === out, s"$name: warm rows differ from cold")
         }
       } finally SharedFrames.release(spark)
     }
+
+  test("every preamble frame keeps its data, not the plan that built it") {
+    try preambleKeys.toSeq.sortBy(_._1).foreach { case (family, keys) =>
+      SharedFrames.release(spark)
+      SparkEntry.preambles(family)(spark, sf)
+      keys.toSeq.sorted.foreach { key =>
+        val frame = SharedFrames.cachedFrame(spark, sf, key)(fail(s"$key is not cached"))
+        val kept = frame.queryExecution.logical.collectWithSubqueries {
+          case p @ (_: Join | _: Aggregate | _: Window | _: Generate) => p.nodeName
+        }
+        assert(kept.isEmpty, s"$family/$key keeps its build plan: ${kept.distinct}")
+      }
+    } finally SharedFrames.release(spark)
+  }
 }

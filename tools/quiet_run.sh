@@ -5,7 +5,10 @@
 # The measurement-protocol companion to the steal_pm gauge in Bench:
 # timing runs launched through this wrapper start in a window the
 # gauge would accept, instead of being discovered as contaminated
-# after the fact.
+# after the fact. A probe divides stolen jiffies by ALL jiffies (idle
+# included), not by busy ones as Bench's run-long gauge does: while the
+# host waits it is nearly idle, and a few stolen jiffies over a handful
+# of busy ones would read hundreds of permille on a quiet host.
 THRESH=30; PROBES=3; MAXWAIT=3600
 while getopts "t:n:w:" o; do case $o in
   t) THRESH=$OPTARG;; n) PROBES=$OPTARG;; w) MAXWAIT=$OPTARG;;
@@ -15,15 +18,15 @@ start=$(date +%s)
 ok=0
 prev=""
 while true; do
-  read -r _ u n s _ _ _ _ st _ < /proc/stat
-  busy=$((u+n+s+st))
+  read -r _ u n s i w q sq st _ < /proc/stat
+  total=$((u+n+s+i+w+q+sq+st))
   if [ -n "$prev" ]; then
-    db=$((busy - pb)); ds=$((st - ps))
-    pm=$(( db > 0 ? 1000*ds/db : 0 ))
+    dt=$((total - pt)); ds=$((st - ps))
+    pm=$(( dt > 0 ? 1000*ds/dt : 0 ))
     if [ "$pm" -le "$THRESH" ]; then ok=$((ok+1)); else ok=0; fi
     if [ "$ok" -ge "$PROBES" ]; then break; fi
   fi
-  pb=$busy; ps=$st; prev=1
+  pt=$total; ps=$st; prev=1
   if [ $(( $(date +%s) - start )) -gt "$MAXWAIT" ]; then
     echo "[quiet_run] no quiet window within ${MAXWAIT}s (last steal_pm=$pm); running anyway" >&2
     break
