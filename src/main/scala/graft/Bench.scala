@@ -25,24 +25,51 @@ object Bench {
     }
   }
 
+  /** The host's CPU ticks so far, (busy, steal), for [[identity]].
+    *
+    * Hypervisor-steal gauge: on a shared host the guest's wall times
+    * inflate with cycles the hypervisor gives to OTHER guests, which
+    * /proc/stat's steal column counts. Recording steal over the run
+    * turns "box mood" (the r14/r16 census drifts) from a forensic
+    * reconstruction into a number printed next to the total: a
+    * record with steal over a few percent is ambient-contaminated
+    * and must be re-measured, never read as a code regression.
+    */
+  def cpuTicks(): Option[(Long, Long)] =
+    try {
+      val cols = scala.io.Source.fromFile("/proc/stat")
+        .getLines().next().split("\\s+").drop(1).map(_.toLong)
+      // busy = user+nice+system+steal (wanted CPU); steal = col 8
+      Some((cols(0) + cols(1) + cols(2) + cols(7), cols(7)))
+    } catch { case _: Throwable => None }
+
+  /** Run identity JSON fields, each led by a comma: which code ran
+    * (`git_sha`), on how many cores (`cpus`), and the permille of wanted
+    * CPU the hypervisor stole since `ticks0` (`steal_pm`). */
+  def identity(spark: org.apache.spark.sql.SparkSession, ticks0: Option[(Long, Long)]): String =
+    gitSha().map(sha => s""","git_sha":"$sha"""").getOrElse("") +
+      s""","cpus":${spark.sparkContext.defaultParallelism}""" + (for {
+        (b0, s0) <- ticks0; (b1, s1) <- cpuTicks(); if b1 > b0
+      } yield s""","steal_pm":${(s1 - s0) * 1000 / (b1 - b0)}""").getOrElse("")
+
+  /** Between queries, drops the ephemeral blocks the previous query
+    * pinned: iterative operators (lineage closure, connected
+    * components, taxonomy trees) localCheckpoint their loop frames,
+    * and those blocks otherwise live until a JVM GC lets the context
+    * cleaner collect them — across 100+ queries in one session that
+    * accumulation becomes GC-burst noise on unrelated queries.
+    * Cross-query DataFrame caches (df.persist) are untouched;
+    * localCheckpoint'd RDDs are never reused across queries.
+    */
+  def sweepEphemeral(spark: org.apache.spark.sql.SparkSession): Unit =
+    spark.sparkContext.getPersistentRDDs.values
+      .filter(org.apache.spark.rdd.GraftRddBridge.isLocallyCheckpointed)
+      .foreach(_.unpersist(blocking = false))
+
   def main(args: Array[String]): Unit = {
     val started = java.time.Instant.now().truncatedTo(java.time.temporal.ChronoUnit.SECONDS)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = SparkLocal.session(sfDir)
-    // hypervisor-steal gauge: on a shared host the guest's wall times
-    // inflate with cycles the hypervisor gives to OTHER guests, which
-    // /proc/stat's steal column counts. Recording steal over the run
-    // turns "box mood" (the r14/r16 census drifts) from a forensic
-    // reconstruction into a number printed next to the total: a
-    // record with steal over a few percent is ambient-contaminated
-    // and must be re-measured, never read as a code regression.
-    def cpuTicks(): Option[(Long, Long)] =
-      try {
-        val cols = scala.io.Source.fromFile("/proc/stat")
-          .getLines().next().split("\\s+").drop(1).map(_.toLong)
-        // busy = user+nice+system+steal (wanted CPU); steal = col 8
-        Some((cols(0) + cols(1) + cols(2) + cols(7), cols(7)))
-      } catch { case _: Throwable => None }
     val ticks0 = cpuTicks()
     // spill accounting for the constrained-heap rehearsal: per-query
     // deltas of the executor spill counters, so a memory-starved run
@@ -72,18 +99,6 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(',').toSet).getOrElse(Set.empty[String])
     def ms3(v: Double): Double = math.round(v * 1000) / 1000.0
-    // Between queries, drop the ephemeral blocks the previous query
-    // pinned: iterative operators (lineage closure, connected
-    // components, taxonomy trees) localCheckpoint their loop frames,
-    // and those blocks otherwise live until a JVM GC lets the context
-    // cleaner collect them — across 100+ queries in one session that
-    // accumulation becomes GC-burst noise on unrelated queries.
-    // Cross-query DataFrame caches (df.persist) are untouched;
-    // localCheckpoint'd RDDs are never reused across queries.
-    def sweepEphemeral(): Unit =
-      spark.sparkContext.getPersistentRDDs.values
-        .filter(org.apache.spark.rdd.GraftRddBridge.isLocallyCheckpointed)
-        .foreach(_.unpersist(blocking = false))
     // run family by family (not Map iteration order): shared frames
     // (dedup shingles/signatures, taxa lineage) are built for a family
     // and released as soon as it ends — persisted frames outliving
@@ -109,7 +124,7 @@ object Bench {
                    System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
                    false }
         val sec = ms3((System.nanoTime() - t0) / 1e9)
-        sweepEphemeral()
+        sweepEphemeral(spark)
         println(s"""{"query":"$name","sec":$sec,"ok":$ok}""")
         (name, sec, ok)
       }
@@ -125,7 +140,7 @@ object Bench {
                    System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
                    false }
         val sec = ms3((System.nanoTime() - t0) / 1e9)
-        sweepEphemeral()
+        sweepEphemeral(spark)
         val spillMb =
           ((spillMem.get() - sm0) + (spillDisk.get() - sd0)) >> 20
         // one line per query as it completes: survives tail-only log
@@ -144,17 +159,8 @@ object Bench {
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = ms3(if (results.nonEmpty) results.values.sum else 0.0)
     val totalSpillMb = (spillMem.get() + spillDisk.get()) >> 20
-    // permille of wanted CPU the hypervisor stole over the run
-    val stealPm = for {
-      (b0, s0) <- ticks0; (b1, s1) <- cpuTicks(); if b1 > b0
-    } yield (s1 - s0) * 1000 / (b1 - b0)
-    val stealJson = stealPm.map(v => s""","steal_pm":$v""").getOrElse("")
-    // run identity: which code ran, on how many cores, over which rows, when
-    val identity = gitSha().map(sha => s""","git_sha":"$sha"""").getOrElse("") +
-      s""","cpus":${spark.sparkContext.defaultParallelism}""" +
-      s""","only":${only.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")}""" +
-      s""","start":"$started""""
-    val full = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failedJson,"spill_mb":$totalSpillMb,"heap_mb":${Runtime.getRuntime.maxMemory() >> 20}$stealJson,"sf":"$sfDir"$identity}"""
+    val full = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failedJson,"spill_mb":$totalSpillMb,"heap_mb":${Runtime.getRuntime.maxMemory() >> 20},"sf":"$sfDir"${identity(spark, ticks0)}""" +
+      s""","only":${only.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")},"start":"$started"}"""
     // the driver stores only the last ~2000 log chars, which the full
     // per-query map exceeds — persist it to a repo file and keep the
     // FINAL stdout line compact enough to always fit the tail capture.

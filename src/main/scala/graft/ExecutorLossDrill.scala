@@ -55,12 +55,6 @@ object ExecutorLossDrill {
     }(enc)
   }
 
-  private def fp(df: DataFrame): (Long, String) = {
-    val r = df.select(count(lit(1)),
-      sum(xxhash64(df.columns.map(col).toIndexedSeq: _*).cast("decimal(38,0)"))).head()
-    (r.getLong(0), if (r.isNullAt(1)) "0" else r.getDecimal(1).toPlainString)
-  }
-
   private def marker(): String = {
     val f = java.io.File.createTempFile("graft-clusterdrill", ".marker")
     f.delete() // the drill's createNewFile is the claim
@@ -134,16 +128,16 @@ object ExecutorLossDrill {
     // mini-cluster included) — pin each mode explicitly so the drill
     // measures both halves rather than the default
     spark.conf.set(graft.ops.Loops.ReliableConf, "false")
-    val loopClean = fp(minLabelLoop(killBetweenRounds = false))
+    val loopClean = Chains.fingerprint(minLabelLoop(killBetweenRounds = false))
     val localLoopFailure =
-      try { fp(minLabelLoop(killBetweenRounds = true)); "survived" }
+      try { Chains.fingerprint(minLabelLoop(killBetweenRounds = true)); "survived" }
       catch { case e: Throwable =>
         val m = String.valueOf(e.getMessage)
         if (m.contains("CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND")) "ckpt_block_lost"
         else e.getClass.getSimpleName }
     spark.conf.set(graft.ops.Loops.ReliableConf, "true")
     val reliableKilled =
-      try Some(fp(minLabelLoop(killBetweenRounds = true)))
+      try Some(Chains.fingerprint(minLabelLoop(killBetweenRounds = true)))
       catch { case e: Throwable =>
         System.err.println(s"[drill] reliable loop died: $e"); None }
     spark.conf.set(graft.ops.Loops.ReliableConf, "false")
@@ -157,8 +151,8 @@ object ExecutorLossDrill {
         .repartition(16, col("l_orderkey")))
         .groupBy(col("l_orderkey"))
         .agg(sum(col("l_quantity")).as("qty"), count(lit(1)).as("n"))
-    val aggClean = fp(agg(identity))
-    val aggKilled = fp(agg(killer(_, marker())))
+    val aggClean = Chains.fingerprint(agg(identity))
+    val aggKilled = Chains.fingerprint(agg(killer(_, marker())))
     val aggRemoved = removed.get()
 
     // drill 3: kill an executor mid-DSv2-write → its in-flight
@@ -171,11 +165,11 @@ object ExecutorLossDrill {
       .write.format("graftkv").option("bucketsize", 256).mode("append").save(kvDir)
     val kvBack = spark.read.format("graftkv").load(kvDir)
       .select(col("k"), col("v"))
-    val kvOk = fp(kvIn) == fp(kvBack)
+    val kvOk = Chains.fingerprint(kvIn) == Chains.fingerprint(kvBack)
 
     val ok = aggClean == aggKilled && kvOk && loopOk && removed.get() >= 4
     System.err.println(s"agg clean=$aggClean killed=$aggKilled " +
-      s"kv_in=${fp(kvIn)} kv_back=${fp(kvBack)} " +
+      s"kv_in=${Chains.fingerprint(kvIn)} kv_back=${Chains.fingerprint(kvBack)} " +
       s"loop clean=$loopClean reliableKilled=$reliableKilled " +
       s"localLoop=$localLoopFailure removed=${removed.get()}")
     println(s"""{"tool":"executor_loss_drill","sf":"$sfDir",""" +

@@ -70,15 +70,6 @@ object RetryDrill {
     }(enc)
   }
 
-  /** Order-insensitive result fingerprint: (row count, Σ xxhash64(row))
-    * — the hash sum rides a decimal so ANSI mode never overflows it.
-    */
-  private def fp(df: DataFrame): (Long, String) = {
-    val r = df.select(count(lit(1)),
-      sum(xxhash64(df.columns.map(col).toIndexedSeq: _*).cast("decimal(38,0)"))).head()
-    (r.getLong(0), if (r.isNullAt(1)) "0" else r.getDecimal(1).toPlainString)
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     // local[N,3]: up to 3 attempts per task, so injected failures retry
@@ -123,9 +114,9 @@ object RetryDrill {
 
     val results = scala.collection.mutable.LinkedHashMap[String, Boolean]()
     def drill(name: String, f: (DataFrame => DataFrame) => DataFrame): Unit = {
-      val clean = fp(f(id))
-      val midF = fp(f(midFlaky))
-      val startF = fp(f(startFlaky))
+      val clean = Chains.fingerprint(f(id))
+      val midF = Chains.fingerprint(f(midFlaky))
+      val startF = Chains.fingerprint(f(startFlaky))
       results(name) = clean == midF && clean == startF
       System.err.println(s"$name clean=$clean mid=$midF start=$startF")
     }
@@ -143,8 +134,8 @@ object RetryDrill {
       .write.format("graftkv").option("bucketsize", 256).mode("append").save(kvDir)
     val kvBack = spark.read.format("graftkv").load(kvDir)
       .select(col("k"), col("v"))
-    results("kv_write") = fp(kvIn) == fp(kvBack)
-    System.err.println(s"kv_write in=${fp(kvIn)} back=${fp(kvBack)}")
+    results("kv_write") = Chains.fingerprint(kvIn) == Chains.fingerprint(kvBack)
+    System.err.println(s"kv_write in=${Chains.fingerprint(kvIn)} back=${Chains.fingerprint(kvBack)}")
 
     val ok = results.values.forall(identity) && fired.get() > 0
     println(s"""{"tool":"retry_drill","sf":"$sfDir",""" +

@@ -62,7 +62,10 @@ object SparkLocal {
         initialShufflePartitions(sfDir, cpus).toString,
       "spark.sql.session.timeZone" -> "UTC",
       "spark.ui.enabled" -> "false",
-      "spark.sql.extensions" -> "graft.plans.GraftExtensions") ++
+      "spark.sql.extensions" -> "graft.plans.GraftExtensions",
+      // no caller adds artifacts, so executor code compiles resolve
+      // classes locally instead of asking the driver for each miss
+      "spark.sql.artifact.isolation.enabled" -> "false") ++
     (if (m == "local" || m.startsWith("local[")) Nil else Seq(
       "spark.executor.extraClassPath" -> codeLocation,
       "spark.executor.extraJavaOptions" ->
@@ -88,7 +91,8 @@ object SparkLocal {
   }
 
   /** The pipelines' shared main: `<sfDir> [outDir]`, times `build` and
-    * prints one JSON line with the stage counts; `fields` adds
+    * prints one JSON line with the stage counts and the run identity
+    * (`git_sha`, `cpus`, `steal_pm` over the build); `fields` adds
     * pipeline-specific figures computed from those counts. */
   def pipelineMain(pipeline: String, args: Array[String],
                    build: (SparkSession, String, String) => Seq[(String, Long)],
@@ -96,12 +100,14 @@ object SparkLocal {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outDir = args.lift(1).getOrElse(s"/tmp/graft-$pipeline")
     val spark = session(sfDir)
+    val ticks0 = Bench.cpuTicks()
     val t0 = System.nanoTime()
     val stages = build(spark, sfDir, outDir)
     val secs = (System.nanoTime() - t0) / 1e9
     val extra = fields(stages.toMap).map { case (k, v) => s""""$k":$v,""" }.mkString
     val stageJson = stages.map { case (n, c) => s""""$n":$c""" }.mkString("{", ",", "}")
-    println(s"""{"pipeline":"$pipeline","sf":"$sfDir","sec":$secs,$extra"stages":$stageJson}""")
+    println(s"""{"pipeline":"$pipeline","sf":"$sfDir","sec":$secs${Bench.identity(spark, ticks0)},""" +
+      s"""$extra"stages":$stageJson}""")
     spark.stop()
   }
 

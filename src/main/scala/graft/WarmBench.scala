@@ -24,14 +24,10 @@ object WarmBench {
       val t0 = System.nanoTime()
       val rows = SparkEntry.queries(q)(spark, sfDir).count()
       println(f"$q run$i ${(System.nanoTime() - t0) / 1e9}%.2f s rows=$rows")
-      // same ephemeral-block sweep as Bench: without it each run's
-      // localCheckpoint blocks linger until a GC lets the context
-      // cleaner fire, and block-manager pressure turns repeat runs
-      // into a noise generator (the exact artifact this tool exists
-      // to remove)
-      spark.sparkContext.getPersistentRDDs.values
-        .filter(org.apache.spark.rdd.GraftRddBridge.isLocallyCheckpointed)
-        .foreach(_.unpersist(blocking = false))
+      // without the sweep each run's localCheckpoint blocks linger, and
+      // block-manager pressure turns repeat runs into a noise generator
+      // (the exact artifact this tool exists to remove)
+      Bench.sweepEphemeral(spark)
     }
     spark.stop()
   }

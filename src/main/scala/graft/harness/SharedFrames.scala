@@ -2,6 +2,7 @@ package graft.harness
 
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -65,6 +66,10 @@ object SharedFrames {
       val df = graft.ops.Loops.materialize(build(), eager = false)
         .persist(StorageLevel.MEMORY_AND_DISK)
       df.count()
+      // the count filled the checkpoint's blocks too: drop them, so the
+      // frame is stored once even where no sweep runs
+      df.queryExecution.analyzed.collectFirst { case r: LogicalRDD => r.rdd }
+        .foreach(_.unpersist(blocking = false))
       built = true
       df
     }.recoverWith { case e =>

@@ -54,6 +54,21 @@ object SinkQueries {
         sum(length(col("text")).cast("long")).as("n_chars"),
         max(col("pos")).as("max_pos"))
 
+  /** The protein2ipr flat file's fields, typed: protein, entry, name,
+    * signature, start, end (the lines of `sink_flatfile_tsv`). */
+  private[graft] def flatfileRows(s: SparkSession, d: String): DataFrame = {
+    val li = Tables.lineitem(s, d)
+    val p = Tables.part(s, d)
+    li.join(broadcast(p), li("l_partkey") === p("p_partkey"))
+      .filter(col("l_partkey") % 3 === 0)
+      .select(col("l_orderkey").as("protein"),
+        concat(lit("IPR"), (col("l_partkey") % 7).cast("string")).as("entry"),
+        col("p_name").as("name"),
+        concat(lit("SIG"), (col("l_partkey") % 20).cast("string")).as("signature"),
+        col("l_linenumber").as("start"),
+        (col("l_linenumber") + floor(col("l_quantity") / 10).cast("int")).as("end"))
+  }
+
   /** Synthetic raw InterProScan matches carrying the FULL default-
     * shape location fields the lookup formatters select from
     * (interpro/lookup.py:231-266): protein=order, member library from
@@ -246,18 +261,9 @@ object SinkQueries {
     }),
 
     "sink_flatfile_tsv" -> ((s, d) => {
-      val li = Tables.lineitem(s, d)
-      val p = Tables.part(s, d)
-      li.join(broadcast(p), li("l_partkey") === p("p_partkey"))
-        .filter(col("l_partkey") % 3 === 0)
-        .select(concat_ws("\t",
-          col("l_orderkey").cast("string"),
-          concat(lit("IPR"), (col("l_partkey") % 7).cast("string")),
-          col("p_name"),
-          concat(lit("SIG"), (col("l_partkey") % 20).cast("string")),
-          col("l_linenumber").cast("string"),
-          (col("l_linenumber") + floor(col("l_quantity") / 10).cast("int"))
-            .cast("string")).as("line"))
+      val rows = flatfileRows(s, d)
+      rows.select(concat_ws("\t", rows.columns.toIndexedSeq.map(col(_).cast("string")): _*)
+        .as("line"))
     }),
 
     // S16/K7: per-protein XML fragment emit in the FULL

@@ -579,18 +579,12 @@ object VectorQueries {
     // Recall@5 of PQ against the exact L2² ground truth (the metric
     // ADC approximates) — the gauge that decides codebook size.
     "ann_pq_recall" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val e = Tables.embeddings(s, d)
         .withColumn("v", VectorOps.asDouble(col("embedding")))
         .select(col("vec_id"), col("v"))
       val q = e.filter(col("vec_id") < 50)
         .select(col("vec_id").as("qid"), col("v").as("qv"))
-      val bf = e.crossJoin(broadcast(q))
-        .filter(col("vec_id") =!= col("qid"))
-        .withColumn("dd", round(VectorOps.l2sq(col("qv"), col("v")), 6))
-        .withColumn("rk", row_number().over(
-          Window.partitionBy(col("qid")).orderBy(col("dd"), col("vec_id"))))
-        .filter(col("rk") <= 5)
+      val bf = VectorOps.l2TopK(e.crossJoin(broadcast(q)).filter(col("vec_id") =!= col("qid")), 5)
         .select(col("qid"), col("vec_id"))
       val pq = pqTopk(s, d)
         .select(col("qid").as("__q"), col("vec_id").as("__v"))
@@ -614,7 +608,6 @@ object VectorQueries {
     // 100 TB this is candidate-generation + re-ranking, the shape
     // every production retrieval stack runs.
     "ann_pq_rerank" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val dtab = VectorOps.pqAssign(
           subFrame(s, d).filter(col("vec_id") < 50), pqCodebook(s, d))
         .select(col("vec_id").as("qid"), col("m"), col("code"), col("d2"))
@@ -626,11 +619,7 @@ object VectorQueries {
         .select(col("vec_id"), col("v"))
       val q = e.filter(col("vec_id") < 50)
         .select(col("vec_id").as("qid"), col("v").as("qv"))
-      e.join(broadcast(shortlist.join(q, Seq("qid"))), Seq("vec_id"))
-        .withColumn("dd", round(VectorOps.l2sq(col("qv"), col("v")), 6))
-        .withColumn("rk", row_number().over(Window.partitionBy(col("qid"))
-          .orderBy(col("dd"), col("vec_id"))))
-        .filter(col("rk") <= 5)
+      VectorOps.l2TopK(e.join(broadcast(shortlist.join(q, Seq("qid"))), Seq("vec_id")), 5)
         .select(col("qid"), col("vec_id"), col("dd"), col("rk"))
     }),
 

@@ -99,6 +99,15 @@ object VectorOps {
     aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0.0d),
       (acc, x) => acc + x)
 
+  /** The `k` nearest of each query's candidate `pairs` (qid, vec_id,
+    * qv, v) by exact L2² over double vectors, rounded to 6 dp (`dd`)
+    * and tie-broken by `vec_id`, ranked as `rk` from 1. */
+  def l2TopK(pairs: DataFrame, k: Int): DataFrame =
+    pairs.withColumn("dd", round(l2sq(col("qv"), col("v")), 6))
+      .withColumn("rk", row_number().over(Window.partitionBy(col("qid"))
+        .orderBy(col("dd"), col("vec_id"))))
+      .filter(col("rk") <= k)
+
   /** (id, m, sv): every vector split into nSub contiguous subvectors —
     * a narrow explode, no shuffle.
     */

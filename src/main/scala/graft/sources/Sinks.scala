@@ -60,8 +60,11 @@ object Sinks {
   def writeJsonDocsWithSentinel(docs: DataFrame, dir: String): Unit = {
     docs.select(to_json(struct(col("*"))).as("doc"))
       .write.mode(SaveMode.Overwrite).text(dir)
-    Files.write(Paths.get(dir, "_DONE"), Array.emptyByteArray)
+    markDone(dir)
   }
+
+  /** Writes the `_DONE` completion sentinel into a finished doc dir. */
+  def markDone(dir: String): Unit = Files.write(Paths.get(dir, "_DONE"), Array.emptyByteArray)
 
   /** Stage a bundled DTD next to an XML export so its relative
     * `<!DOCTYPE ... SYSTEM "name.dtd">` resolves (the reference ships

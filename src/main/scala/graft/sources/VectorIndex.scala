@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.Chains.Format.Parquet
 import graft.ops.VectorOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -13,7 +14,7 @@ import org.apache.spark.sql.types.DecimalType
   * fan out to the shards that can contain their key) recast for
   * similarity search:
   *
-  *  - `build` trains the coarse quantizer (deterministic seed
+  *  - `build` ([[centroids]] + [[assign]]) trains the coarse quantizer (deterministic seed
   *    centroids + one decimal-exact Lloyd round — the exact
   *    arithmetic of the in-memory IVF family, so index builds are
   *    reproducible across engines and runs), assigns every vector to
@@ -34,42 +35,38 @@ import org.apache.spark.sql.types.DecimalType
   */
 object VectorIndex {
 
-  /** Train + assign + quantize + write. Seeds are the `nCells`
-    * SMALLEST ids (the IVF family's deterministic seeding, robust to
-    * id ranges that don't start at 0 — a TakeOrderedAndProject top-k,
-    * never a full sort); one Lloyd round with DECIMAL(18,9) component
-    * sums keeps the centroid update order-independent. A batch with
-    * fewer than `nCells` vectors fails fast rather than writing a
-    * degenerate index.
-    */
-  def build(emb: DataFrame, idCol: String, vecCol: String,
-            nCells: Int, outDir: String): Unit = {
-    val e = emb.select(col(idCol).as("vec_id"),
-        VectorOps.asDouble(col(vecCol)).as("v"))
+  /** `emb` as (vec_id, v, nv): double vectors and their norms. */
+  private def vectors(emb: DataFrame, idCol: String, vecCol: String): DataFrame =
+    emb.select(col(idCol).as("vec_id"), VectorOps.asDouble(col(vecCol)).as("v"))
       .withColumn("nv", VectorOps.norm(col("v")))
 
-    def assignTo(cents: DataFrame): DataFrame =
-      e.crossJoin(broadcast(cents))
-        .withColumn("simc", round(
-          VectorOps.dot(col("v"), col("cv")) / (col("nv") * col("cn")), 6))
-        .withColumn("rc", row_number().over(Window.partitionBy(col("vec_id"))
-          .orderBy(col("simc").desc, col("cid"))))
-        .filter(col("rc") === 1)
-        .select(col("vec_id"), col("v"), col("nv"), col("cid").as("cell"))
+  /** Each of `vectors`' rows once per cell (`cid` of `cents`) among
+    * its `n` nearest by cosine, ties to the lower cell id. */
+  private def nearest(vectors: DataFrame, cents: DataFrame, n: Int = 1): DataFrame =
+    vectors.crossJoin(broadcast(cents))
+      .withColumn("simc", round(
+        VectorOps.dot(col("v"), col("cv")) / (col("nv") * col("cn")), 6))
+      .withColumn("rc", row_number().over(Window.partitionBy(col("vec_id"))
+        .orderBy(col("simc").desc, col("cid"))))
+      .filter(col("rc") <= n)
+      .select(col("vec_id"), col("v"), col("nv"), col("cid").as("cell"))
 
+  /** Trains the coarse quantizer: the centroid sidecar (cid, cv, cn).
+    * Seeds are the `nCells` SMALLEST ids (the IVF family's
+    * deterministic seeding, robust to id ranges that don't start at 0
+    * — a TakeOrderedAndProject top-k, never a full sort); one Lloyd
+    * round with DECIMAL(18,9) component sums keeps the centroid update
+    * order-independent. A batch with fewer than `nCells` vectors fails
+    * fast rather than training a degenerate index.
+    */
+  def centroids(emb: DataFrame, idCol: String, vecCol: String, nCells: Int): DataFrame = {
+    val e = vectors(emb, idCol, vecCol)
     val seed = e.orderBy(col("vec_id")).limit(nCells)
       .select(col("vec_id").as("cid"), col("v").as("cv"), col("nv").as("cn"))
-      .persist()
     val seeded = seed.count()
-    if (seeded != nCells) {
-      // release the just-persisted frame on the failure path too —
-      // a bare require would leak the cached blocks
-      seed.unpersist(blocking = false)
-      throw new IllegalArgumentException(
-        s"vector index build needs >= $nCells vectors to seed $nCells " +
-          s"cells, found $seeded")
-    }
-    val refined = assignTo(seed)
+    require(seeded == nCells,
+      s"vector index build needs >= $nCells vectors to seed $nCells cells, found $seeded")
+    nearest(e, seed)
       .select(col("cell"), posexplode(col("v")).as(Seq("pos", "val")))
       .groupBy(col("cell"), col("pos"))
       .agg((sum(col("val").cast(DecimalType(18, 9))).cast("double") /
@@ -77,25 +74,28 @@ object VectorIndex {
       .groupBy(col("cell"))
       .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
         x => x("m")).as("cv"))
-      .select(col("cell").as("cid"), col("cv"),
-        VectorOps.norm(col("cv")).as("cn"))
+      .select(col("cell").as("cid"), col("cv"), VectorOps.norm(col("cv")).as("cn"))
+  }
 
-    // the sidecar is tiny but load-bearing: persist it so the final
-    // assignment and the write both see ONE materialization
-    val cents = refined.persist()
-    cents.count()
-
-    val quantized = assignTo(cents)
+  /** The layout rows (vec_id, ma, q, cell) of `emb`: each vector in its
+    * nearest of `cents`' cells (in each of its `n` nearest, to probe),
+    * scalar-quantized to int8 codes. */
+  def assign(emb: DataFrame, idCol: String, vecCol: String, cents: DataFrame,
+             n: Int = 1): DataFrame =
+    nearest(vectors(emb, idCol, vecCol), cents, n)
       .withColumn("ma", array_max(transform(col("v"), x => abs(x))))
       .withColumn("q", transform(col("v"),
         x => round(x * lit(127.0) / col("ma")).cast("int")))
       .select(col("vec_id"), col("ma"), col("q"), col("cell"))
 
-    quantized.write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$outDir/cells")
-    cents.write.mode("overwrite").parquet(s"$outDir/centroids")
-    cents.unpersist(blocking = false)
-    seed.unpersist(blocking = false)
+  /** Train + assign + quantize + write: the centroid sidecar, then the
+    * cell-partitioned layout assigned against the sidecar as written,
+    * each read back certified ([[graft.Chains.Stages]]). */
+  def build(emb: DataFrame, idCol: String, vecCol: String,
+            nCells: Int, outDir: String): Unit = {
+    val st = new graft.Chains.Stages(emb.sparkSession, outDir)
+    st.write("centroids", Parquet(), "centroids")(centroids(emb, idCol, vecCol, nCells))
+    st.write("cells", Parquet(Seq("cell")), "cells")(assign(emb, idCol, vecCol, st("centroids")))
   }
 
   /** O(batch) incremental ingest: assign a NEW vector batch to the
@@ -108,23 +108,9 @@ object VectorIndex {
     * dedup_incremental posture for the vector store.
     */
   def append(spark: SparkSession, indexDir: String, emb: DataFrame,
-             idCol: String, vecCol: String): Unit = {
-    val cents = spark.read.parquet(s"$indexDir/centroids")
-    val e = emb.select(col(idCol).as("vec_id"),
-        VectorOps.asDouble(col(vecCol)).as("v"))
-      .withColumn("nv", VectorOps.norm(col("v")))
-    e.crossJoin(broadcast(cents))
-      .withColumn("simc", round(
-        VectorOps.dot(col("v"), col("cv")) / (col("nv") * col("cn")), 6))
-      .withColumn("rc", row_number().over(Window.partitionBy(col("vec_id"))
-        .orderBy(col("simc").desc, col("cid"))))
-      .filter(col("rc") === 1)
-      .withColumn("ma", array_max(transform(col("v"), x => abs(x))))
-      .withColumn("q", transform(col("v"),
-        x => round(x * lit(127.0) / col("ma")).cast("int")))
-      .select(col("vec_id"), col("ma"), col("q"), col("cid").as("cell"))
+             idCol: String, vecCol: String): Unit =
+    assign(emb, idCol, vecCol, spark.read.parquet(s"$indexDir/centroids"))
       .write.mode("append").partitionBy("cell").parquet(s"$indexDir/cells")
-  }
 
   /** Probe-and-rank over the persisted layout. `queries` carries
     * (idCol, vecCol) float/double vectors; results are
@@ -134,20 +120,8 @@ object VectorIndex {
     */
   def search(spark: SparkSession, indexDir: String, queries: DataFrame,
              idCol: String, vecCol: String, nprobe: Int, k: Int): DataFrame = {
-    val cents = spark.read.parquet(s"$indexDir/centroids")
-    val q = queries.select(col(idCol).as("qid"),
-        VectorOps.asDouble(col(vecCol)).as("qv"))
-      .withColumn("qn", VectorOps.norm(col("qv")))
-    val probed = q.crossJoin(broadcast(cents))
-      .withColumn("simc", round(
-        VectorOps.dot(col("qv"), col("cv")) / (col("qn") * col("cn")), 6))
-      .withColumn("rc", row_number().over(Window.partitionBy(col("qid"))
-        .orderBy(col("simc").desc, col("cid"))))
-      .filter(col("rc") <= nprobe)
-      .withColumn("ma", array_max(transform(col("qv"), x => abs(x))))
-      .withColumn("qq", transform(col("qv"),
-        x => round(x * lit(127.0) / col("ma")).cast("int")))
-      .select(col("qid"), col("cid").as("cell"), col("qq"))
+    val probed = assign(queries, idCol, vecCol, spark.read.parquet(s"$indexDir/centroids"), nprobe)
+      .select(col("vec_id").as("qid"), col("cell"), col("q").as("qq"))
 
     // the probed cell ids are routing metadata (<= nQueries x nprobe
     // longs) — collecting them turns the cell read into a STATIC
@@ -189,15 +163,9 @@ object VectorIndex {
     val shortlist = search(spark, indexDir, queries, idCol, vecCol,
         nprobe, shortK)
       .select(col("qid"), col("vec_id"))
-    val qv = queries.select(col(idCol).as("qid"),
-      VectorOps.asDouble(col(vecCol)).as("qv"))
-    val e = corpus.select(col(idCol).as("vec_id"),
-      VectorOps.asDouble(col(vecCol)).as("v"))
-    e.join(broadcast(shortlist.join(qv, Seq("qid"))), Seq("vec_id"))
-      .withColumn("dd", round(VectorOps.l2sq(col("qv"), col("v")), 6))
-      .withColumn("rk", row_number().over(Window.partitionBy(col("qid"))
-        .orderBy(col("dd"), col("vec_id"))).cast("int"))
-      .filter(col("rk") <= k)
+    val qv = vectors(queries, idCol, vecCol).select(col("vec_id").as("qid"), col("v").as("qv"))
+    VectorOps.l2TopK(vectors(corpus, idCol, vecCol)
+        .join(broadcast(shortlist.join(qv, Seq("qid"))), Seq("vec_id")), k)
       .select(col("qid"), col("vec_id"), col("dd"), col("rk"))
   }
 }

@@ -4,14 +4,16 @@ import graft.harness.SharedFrames
 import org.apache.spark.rdd.GraftRddBridge
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Generate, Join, Window}
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Shared frames change where a family's work runs, never what its
   * queries return. Per family with a frame preamble: the preamble
   * builds exactly its declared key set, every query run cold (cache
   * released just before it) builds no key outside that set, and every
   * query that reads a shared frame returns the same rows warm (after
-  * the preamble and Bench's between-row sweep) as cold. A cached frame
-  * keeps its data only: its plan holds none of its build's operators.
+  * the preamble, unswept and after Bench's between-row sweep) as cold.
+  * A cached frame keeps its data only, stored once: its plan holds
+  * none of its build's operators, and its checkpoint no blocks.
   */
 class SharedFramesSpec extends SparkSpec {
 
@@ -75,11 +77,15 @@ class SharedFramesSpec extends SparkSpec {
         val readers = cold.filter(_._3.intersect(keys).nonEmpty)
         assert(readers.nonEmpty, s"no $family query reads a shared frame")
 
+        // warm as a library caller reads (no sweep), then as Bench does
         SharedFrames.release(spark)
         SparkEntry.preambles(family)(spark, sf)
-        sweepLocalCheckpoints()
-        readers.foreach { case (name, out, _) =>
-          assert(rows(SparkEntry.queries(name)) === out, s"$name: warm rows differ from cold")
+        for (swept <- Seq(false, true)) {
+          if (swept) sweepLocalCheckpoints()
+          readers.foreach { case (name, out, _) =>
+            assert(rows(SparkEntry.queries(name)) === out,
+              s"$name: warm rows differ from cold${if (swept) " after a sweep" else ""}")
+          }
         }
       } finally SharedFrames.release(spark)
     }
@@ -94,6 +100,12 @@ class SharedFramesSpec extends SparkSpec {
           case p @ (_: Join | _: Aggregate | _: Window | _: Generate) => p.nodeName
         }
         assert(kept.isEmpty, s"$family/$key keeps its build plan: ${kept.distinct}")
+        // stored once, before any sweep: the checkpoint holds no blocks
+        // beside the persisted copy
+        val checkpoint = frame.queryExecution.analyzed.collect { case r: LogicalRDD => r.rdd.id }
+        assert(checkpoint.nonEmpty && checkpoint.forall(id =>
+          !spark.sparkContext.getPersistentRDDs.contains(id)),
+          s"$family/$key: its checkpoint still holds blocks")
       }
     } finally SharedFrames.release(spark)
   }
